@@ -117,8 +117,10 @@ object TableIO {
     * (partitioned by `partCol`), replacing any previous version of those
     * partitions, then commit a new snapshot covering old ∪ new. Lineage
     * metrics are recorded per partition in the manifest: the row count plus
-    * whatever counters `metricsFn` derives from the (persisted) slice —
-    * called after the write so the counters read the cache, not a recompute.
+    * whatever counters `metricsFn` derives from the slice. Both read the
+    * partition files the write just produced (only the keys it rewrote, with
+    * `partCol` typed as in `df`), so `df` is computed once, by the write, and
+    * no slice-sized cache is held.
     */
   def replacePartitions(spark: SparkSession, table: String, df: DataFrame,
       partCol: String, keys: Seq[String],
@@ -139,41 +141,48 @@ object TableIO {
       spark0.conf.get("graft.write.maxRecordsPerFile", "5000000").toLong
     val payloadCols = df.columns.filterNot(_ == partCol).map(col)
     val slice = df.filter(col(partCol).isin(keys: _*))
-      // align the write exchange with the partition spec (+ bounded salt)
-      .repartition(col(partCol), pmod(hash(payloadCols: _*), lit(salts)))
-      // ONE pipeline compute per commit: the write materializes the cache,
-      // the lineage-count pass below reads it back instead of recomputing
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // align the write exchange with the partition spec (+ bounded salt); the
+      // explicit width keeps AQE from coalescing the salt buckets of a small
+      // slice back into one task
+      .repartition(spark0.conf.get("spark.sql.shuffle.partitions").toInt,
+        col(partCol), pmod(hash(payloadCols: _*), lit(salts)))
+    def partDir(k: String): Path = dataDir(table).resolve(s"$partCol=$k")
+    def parquetFiles(k: String): Set[String] =
+      if (!Files.isDirectory(partDir(k))) Set.empty
+      else {
+        val s = Files.list(partDir(k))
+        try s.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.endsWith(".parquet")).toSet
+        finally s.close()
+      }
+    val before = keys.map(k => k -> parquetFiles(k)).toMap
     slice.write
       .mode(SaveMode.Overwrite)
       .partitionBy(partCol)
       .option("partitionOverwriteMode", "dynamic")
       .option("maxRecordsPerFile", maxRecords)
       .parquet(dataDir(table).toString)
-    val counts = slice.groupBy(partCol).count().collect()
-      .map(r => r.get(0).toString -> r.getLong(1)).toMap
-    val lineage = metricsFn(slice)
-    slice.unpersist(blocking = false)
-    // dynamic overwrite leaves untouched any requested partition that had no
-    // rows this time — drop its stale directory so snapshot and data agree
-    for (k <- keys if counts.getOrElse(k, 0L) == 0L) {
-      val dir = dataDir(table).resolve(s"$partCol=$k")
-      if (Files.exists(dir)) {
-        Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      }
-    }
-    // honest file counts in the manifest: read them off the committed layout
-    def fileCount(k: String): Int = {
-      val dir = dataDir(table).resolve(s"$partCol=$k")
-      if (!Files.exists(dir)) 0
+    // dynamic overwrite replaces the directory of every key that got rows
+    // with files named after this write's job id, and leaves untouched any
+    // requested key that had no rows this time: a key was rewritten iff its
+    // file set changed. Drop the stale directories so snapshot and data
+    // agree.
+    val rewritten = keys.map(k => k -> parquetFiles(k))
+      .filter { case (k, fs) => fs.nonEmpty && fs != before(k) }.toMap
+    for (k <- keys if !rewritten.contains(k) && Files.exists(partDir(k)))
+      Files.walk(partDir(k)).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    val (counts, lineage) =
+      if (rewritten.isEmpty) (Map.empty[String, Long], Map.empty[String, Map[String, Long]])
       else {
-        val s = Files.list(dir)
-        try s.iterator().asScala.count(_.toString.endsWith(".parquet"))
-        finally s.close()
+        val written = spark0.read.schema(df.schema)
+          .option("basePath", dataDir(table).toString)
+          .parquet(keys.filter(rewritten.contains).map(partDir(_).toString): _*)
+        (written.groupBy(partCol).count().collect()
+          .map(r => r.get(0).toString -> r.getLong(1)).toMap,
+          metricsFn(written))
       }
-    }
     val newParts = keys.map { k =>
-      k -> PartitionMeta(k, counts.getOrElse(k, 0L), fileCount(k),
+      k -> PartitionMeta(k, counts.getOrElse(k, 0L), rewritten.get(k).fold(0)(_.size),
         lineage.getOrElse(k, Map.empty))
     }.toMap
     val m = Manifest(prev.snapshotId + 1, prev.partitions ++ newParts)
@@ -260,11 +269,12 @@ object TableIO {
         val staleCmp = stale.select(allCols.map(c => col(c).as(s"__st_$c")): _*)
         val affRows = all.filter(col(partCol).isin(affected: _*))
         // leaf-materialize the keep side BEFORE the rewrite: replacePartitions'
-        // dynamic overwrite deletes the very parquet files this plan reads, so
-        // a lazy `kept` would recompute from deleted files if any persisted
-        // block were lost after the commit (post-commit counts/metricsFn) —
-        // data already rewritten, job failed, manifest diverged. Materializing
-        // severs the read-from-overwritten-source cycle.
+        // dynamic overwrite replaces the very partition directories this plan
+        // reads. A lazy `kept` would make the write read its own target, and
+        // be correct only because dynamic overwrite defers the replacement
+        // to job commit (a static overwrite deletes first, which is why Spark
+        // refuses such table inserts). Materializing severs the
+        // read-from-overwritten-source cycle.
         val kept = graft.plans.Caches.leaf(affRows.join(staleCmp,
           allCols.map(c => col(c) <=> col(s"__st_$c")).reduce(_ && _), "left_anti"))
         // carry the affected partitions' lineage metrics forward: they describe

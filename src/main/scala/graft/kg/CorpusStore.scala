@@ -78,12 +78,22 @@ object CorpusStore {
 
   /** Scan the committed table with the input_hint schema asserted. The
     * returned frame carries the partition column for source-level pruning.
+    * `parts` reads only those `part=<value>` directories, keeping `basePath`
+    * so `part` stays a column: the planner lists just them instead of the
+    * whole table root (a parallel listing job once the root holds more than
+    * 32 directories). A requested part with no directory yields no rows.
     */
-  def scan(spark: SparkSession, p: Synth.Params): DataFrame = {
-    val dir = ensure(spark, p)
+  def scan(spark: SparkSession, p: Synth.Params,
+      parts: Option[Set[String]] = None): DataFrame = {
+    val root = s"${ensure(spark, p)}/data"
+    val paths = parts match {
+      case Some(ps) => ps.toSeq.sorted.map(v => s"$root/part=$v")
+        .filter(d => Files.isDirectory(Paths.get(d)))
+      case None => Seq(root)
+    }
     val df = spark.read.schema(scanSchema)
-      .option("basePath", s"$dir/data")
-      .parquet(s"$dir/data")
+      .option("basePath", root)
+      .parquet(paths: _*)
     val got = StructType(df.schema.fields.filter(_.name != "part"))
     require(got.sql == documentsSchema.sql,
       s"documents table drifted from the input_hint schema: ${got.sql}")

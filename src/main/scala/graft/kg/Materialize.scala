@@ -1,6 +1,7 @@
 package graft.kg
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.emit.TableIO
 
@@ -14,8 +15,45 @@ import graft.emit.TableIO
   * via REPLACE WHERE and committed atomically. On restart, committed dates
   * are pruned from the work list BEFORE parsing — the day-page scan itself
   * shrinks, not just the write.
+  *
+  * The article side is enriched once per table, not once per month (the
+  * reference memoizes `get_article` across its whole month loop, J9): the
+  * first month that commits writes the enriched articles as a snapshot under
+  * `<table>/_enriched/`, and every later month — in this run or a restarted
+  * one — reads it back.
   */
 object Materialize {
+
+  /** The table's enriched-article snapshot, built and committed on first
+    * use. Layout: `<table>/_enriched/data/` parquet plus a marker holding the
+    * corpus key ([[CorpusStore.dirFor]]); the marker is written to a
+    * temporary file and renamed, so a crash between the data write and the
+    * rename leaves no marker and the next call rebuilds the data. A marker
+    * naming another corpus fails: the table was built from different
+    * articles, and joining its months against these would mix two corpora.
+    */
+  def enrichedSnapshot(spark: SparkSession, table: String,
+      p: Synth.Params): Dataset[EnrichedArticle] = synchronized {
+    val dir = Paths.get(table, "_enriched")
+    val data = dir.resolve("data").toString
+    val marker = dir.resolve("_GRAFT_ENRICHED_OK")
+    val key = CorpusStore.dirFor(p)
+    if (Files.exists(marker)) {
+      val built = Files.readString(marker).trim
+      require(built == key,
+        s"enriched snapshot $dir was built from corpus $built, not $key")
+    } else {
+      val (e, caches) = Pipeline.enrichedArticlesTracked(spark, p)
+      try e.write.mode("overwrite").parquet(data)
+      finally caches.foreach(_.unpersist(blocking = false))
+      val tmp = dir.resolve("_GRAFT_ENRICHED_OK.tmp")
+      Files.writeString(tmp, key)
+      Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING) // the rename IS the commit
+    }
+    val enc = Encoders.product[EnrichedArticle]
+    spark.read.schema(enc.schema).parquet(data).as(enc)
+  }
 
   /** Per-partition lineage counters for the manifest (north rule:
     * "per-partition checkpointing, lineage records"): triple/module/entity
@@ -64,15 +102,23 @@ object Materialize {
     * log records every attempt). `crashOnError` restores the reference's
     * `-coe` crash-immediately behavior.
     *
+    * The enriched-article snapshot is outside that policy: every month
+    * joins against it, so a snapshot that cannot be built or belongs to
+    * another corpus fails the run instead of skipping every month.
+    *
     * @param maxMonths stop after this many months (for kill/restart tests)
     * @param crashOnError rethrow the first month failure instead of skipping
-    * @param buildFn the month build (injectable: specs poison one month)
+    * @param buildFn the month build over the table's enriched articles
+    *   (injectable: specs poison one month)
     */
   def run(spark: SparkSession, sfDir: String, table: String,
       maxMonths: Int = Int.MaxValue, crashOnError: Boolean = false,
-      buildFn: (SparkSession, Synth.Params, Set[String]) => Pipeline.Build =
-        (s, p, dates) => Pipeline.trackedBuild(s, p, Some(dates))): Int = {
+      buildFn: (SparkSession, Synth.Params, Set[String], Dataset[EnrichedArticle]) =>
+        Pipeline.Build = (s, p, dates, enriched) =>
+          Pipeline.trackedBuild(s, p, Some(dates), Some(enriched))): Int = {
     val p = Synth.paramsFor(sfDir)
+    // built by the first month that commits, read by every later one
+    lazy val enriched = enrichedSnapshot(spark, table, p)
     var committed = 0
     var monthsDone = 0
     // avgDayTime/avgMonthTime analogues (analytics.py:161-163): the reference
@@ -122,8 +168,9 @@ object Materialize {
           // poll of the previous month is not billed to this one
           val task0 = settledTaskMs()
           val t0 = System.nanoTime
+          val articles = enriched // outside the skip policy: every month needs it
           try {
-            val b = buildFn(spark, p, todo.toSet)
+            val b = buildFn(spark, p, todo.toSet, articles)
             try {
               TableIO.replacePartitions(spark, table, b.triples.toDF(), "event_date",
                 todo, metricsFn = slice => {

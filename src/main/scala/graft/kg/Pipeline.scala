@@ -31,18 +31,17 @@ object Pipeline {
       forcePlace: Boolean, traverseChildren: Boolean)
 
   /** Day-page scan of the persisted `documents` table (input_hint contract).
-    * Resume pruning happens at the SOURCE: `onlyDates` becomes a filter on
-    * the partition column, so uncommitted dates never leave the parquet
-    * planner (reference analogue: skip-month-if-exists, __main__.py:286).
+    * Resume pruning happens at the SOURCE: `onlyDates` names the partition
+    * directories the scan reads, so committed dates are never listed, let
+    * alone parsed (reference analogue: skip-month-if-exists,
+    * __main__.py:286).
     */
   def dayDocs(spark: SparkSession, p: Synth.Params,
       onlyDates: Option[Set[String]] = None): Dataset[SpanDoc] = {
     import spark.implicits._
-    val scan = CorpusStore.scan(spark, p)
-    val dayParts = onlyDates match {
-      case Some(ds) => scan.filter(col("part").isin(ds.toSeq: _*))
-      case None => scan.filter(!col("part").startsWith("articles-"))
-    }
+    val scan = CorpusStore.scan(spark, p, onlyDates)
+    val dayParts =
+      if (onlyDates.isDefined) scan else scan.filter(!col("part").startsWith("articles-"))
     dayParts.select(col("doc_id"), col("spans")).as[SpanDoc]
   }
 
@@ -170,16 +169,32 @@ object Pipeline {
     (b.triples, b.caches)
   }
 
+  /** The triple build over the day pages of `onlyDates` (all when None).
+    *
+    * @param enriched the enriched-article frame the build joins against.
+    *   None (the default) enriches the whole article corpus in memory for
+    *   this build; the committed write path passes the table's enriched
+    *   snapshot ([[Materialize.enrichedSnapshot]]) so a backfill enriches
+    *   once, not once per month.
+    */
   def trackedBuild(spark: SparkSession, p: Synth.Params,
-      onlyDates: Option[Set[String]] = None): Build = {
+      onlyDates: Option[Set[String]] = None,
+      enriched: Option[Dataset[EnrichedArticle]] = None): Build = {
     import spark.implicits._
 
     // days feed two consumers (href explode + the doc join) — persist so the
     // day-page corpus is parsed once, not twice
     val days = parsedDays(spark, p, onlyDates)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (enriched, enrichCaches) = enrichedArticlesTracked(spark, p)
-    val articles = enriched.persist(StorageLevel.MEMORY_AND_DISK)
+    // three joins read the articles (doc resolution, child mentions, mention
+    // payloads): an in-memory enrichment is persisted so it runs once
+    val (articles, enrichCaches) = enriched match {
+      case Some(e) => (e, Nil)
+      case None =>
+        val (e, caches) = enrichedArticlesTracked(spark, p)
+        val persisted = e.persist(StorageLevel.MEMORY_AND_DISK)
+        (persisted, persisted +: caches)
+    }
 
     // per-doc article resolution: one join, grouped back by doc_id
     val refs = days.flatMap(pd => docHrefs(pd).map(h => (pd.doc_id, h)))
@@ -268,7 +283,7 @@ object Pipeline {
       .agg(sum(col("time_errs")).cast("long").as("n_time_parse_errors"),
         sum(col("date_errs")).cast("long").as("n_date_parse_errors"))
 
-    Build(out, Seq(days, articles, docJoined, depth1, mentArts) ++ enrichCaches,
+    Build(out, Seq(days, docJoined, depth1, mentArts) ++ enrichCaches,
       errorsByDate)
   }
 }

@@ -20,7 +20,9 @@ import graft.emit.TableIO
   * The per-batch work reuses the BATCH pipeline on the batch's dates
   * (foreachBatch), so stream and batch semantics are identical by
   * construction — IncrementalKgSpec asserts streamed table == one-shot
-  * batch table triple-for-triple.
+  * batch table triple-for-triple. Like a batch backfill, every micro-batch
+  * joins against the table's enriched-article snapshot, which the first
+  * batch builds.
   */
 object IncrementalKg {
 
@@ -43,7 +45,8 @@ object IncrementalKg {
         val dates = batch.select(col("part")).distinct()
           .collect().map(_.getString(0)).sorted
         if (dates.nonEmpty) {
-          val b = Pipeline.trackedBuild(spark, p, Some(dates.toSet))
+          val b = Pipeline.trackedBuild(spark, p, Some(dates.toSet),
+            Some(Materialize.enrichedSnapshot(spark, table, p)))
           TableIO.replacePartitions(spark, table, b.triples.toDF(),
             "event_date", dates,
             metricsFn = slice => Materialize.lineageMetrics(slice, b.articleErrorsByDate))

@@ -1,7 +1,11 @@
 package graft.kg
 
-import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 import graft.emit.TableIO
 
@@ -27,9 +31,6 @@ class MaterializeSpec extends AnyFunSuite {
     val c2 = Materialize.run(spark, sfDir, table)
     assert(c2 == 28) // February only — January partitions were skipped
     // final snapshot equals a from-scratch full run
-    val got = TableIO.read(spark, table, "event_date")
-      .collect().map(_.toString).toSet
-    val full = Pipeline.triples(spark, sfDir).collect().map(_.toString).toSet
     // read() returns event_date as a partition column possibly reordered;
     // compare as Triple-shaped sets
     val gotSet = TableIO.read(spark, table, "event_date")
@@ -72,11 +73,12 @@ class MaterializeSpec extends AnyFunSuite {
 
   test("skip-and-remember: a poisoned month is skipped, logged, and retried next run") {
     val table = Files.createTempDirectory("graft_triples_poison").toString
-    val boom: (SparkSession, Synth.Params, Set[String]) => Pipeline.Build =
-      (s, p, dates) =>
+    val boom: (SparkSession, Synth.Params, Set[String], Dataset[EnrichedArticle]) =>
+        Pipeline.Build =
+      (s, p, dates, enriched) =>
         if (dates.exists(_.startsWith("2022-01")))
           throw new RuntimeException("poisoned month")
-        else Pipeline.trackedBuild(s, p, Some(dates))
+        else Pipeline.trackedBuild(s, p, Some(dates), Some(enriched))
     // January fails, February must still commit (reference __main__.py:297-317)
     val c1 = Materialize.run(spark, sfDir, table, buildFn = boom)
     assert(c1 == 28)
@@ -100,7 +102,7 @@ class MaterializeSpec extends AnyFunSuite {
     // must rethrow it, not survive it on a broken/interrupted JVM
     intercept[InterruptedException] {
       Materialize.run(spark, sfDir, table,
-        buildFn = (_, _, _) => throw new InterruptedException("cancelled"))
+        buildFn = (_, _, _, _) => throw new InterruptedException("cancelled"))
     }
     assert(TableIO.unparsedMonths(table).isEmpty)
   }
@@ -137,5 +139,91 @@ class MaterializeSpec extends AnyFunSuite {
     assert(after.snapshotId == before.snapshotId + 1)
     assert(after.partitions(someDate).rows == before.partitions(someDate).rows)
     assert((after.partitions - someDate) == (before.partitions - someDate))
+  }
+
+  private def snapshotMarker(table: String): Path =
+    Paths.get(table, "_enriched", "_GRAFT_ENRICHED_OK")
+
+  /** name → last-modified millis of the enriched snapshot's data files. */
+  private def snapshotFiles(table: String): Map[String, Long] = {
+    val s = Files.list(Paths.get(table, "_enriched", "data"))
+    try s.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .map(f => f.getFileName.toString -> Files.getLastModifiedTime(f).toMillis).toMap
+    finally s.close()
+  }
+
+  /** Descriptions of the file scans in every SQL execution `f` runs,
+    * cached plans included. A sentinel action marks the end: listener
+    * events are delivered in order, so once its start arrives, every
+    * execution of `f` has been seen.
+    */
+  private def scansDuring(f: => Unit): Seq[String] = {
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val endMark = s"scans-end-${System.nanoTime}"
+    val seenEnd = new java.util.concurrent.CountDownLatch(1)
+    def walk(i: SparkPlanInfo): Unit = {
+      if (i.nodeName.contains("Scan"))
+        scans.add(i.simpleString + " " + i.metadata.values.mkString(" "))
+      i.children.foreach(walk)
+    }
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          if (s.description == endMark) seenEnd.countDown() else walk(s.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      spark.sparkContext.setJobDescription(endMark)
+      try spark.range(1).collect() finally spark.sparkContext.setJobDescription(null)
+      assert(seenEnd.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the sentinel execution")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    scans.asScala.toSeq
+  }
+
+  test("enriched snapshot: a resumed run reuses it and scans no article pages") {
+    val table = Files.createTempDirectory("graft_triples_snap").toString
+    Materialize.run(spark, sfDir, table, maxMonths = 1)
+    assert(Files.readString(snapshotMarker(table)) == CorpusStore.dirFor(Synth.paramsFor(sfDir)))
+    val files = snapshotFiles(table)
+    assert(files.nonEmpty)
+    val scans = scansDuring(assert(Materialize.run(spark, sfDir, table) == 28))
+    assert(snapshotFiles(table) == files, "the resumed run rewrote the snapshot")
+    assert(scans.exists(_.contains("_enriched")), s"no snapshot scan in:\n${scans.mkString("\n")}")
+    assert(!scans.exists(_.contains("articles-")),
+      s"the resumed run scanned article pages:\n${scans.mkString("\n")}")
+    // the snapshot round-trips the in-memory enrichment exactly
+    val p = Synth.paramsFor(sfDir)
+    val (inMemory, caches) = Pipeline.enrichedArticlesTracked(spark, p)
+    try assert(Materialize.enrichedSnapshot(spark, table, p).collect().toSet ==
+      inMemory.collect().toSet)
+    finally caches.foreach(_.unpersist(blocking = false))
+  }
+
+  test("enriched snapshot: a missing marker (crash before the rename) rebuilds it") {
+    val table = Files.createTempDirectory("graft_triples_snap_crash").toString
+    Materialize.run(spark, sfDir, table, maxMonths = 1)
+    val first = snapshotFiles(table)
+    Files.delete(snapshotMarker(table))
+    assert(Materialize.run(spark, sfDir, table) == 28)
+    assert(Files.exists(snapshotMarker(table)))
+    // a rewrite names every file after its own job id
+    val rebuilt = snapshotFiles(table)
+    assert(rebuilt.nonEmpty && rebuilt.keySet.intersect(first.keySet).isEmpty)
+  }
+
+  test("enriched snapshot: a marker of another corpus fails the run loudly") {
+    val table = Files.createTempDirectory("graft_triples_snap_key").toString
+    Materialize.run(spark, sfDir, table, maxMonths = 1)
+    Files.writeString(snapshotMarker(table), "target/corpus/another-corpus")
+    val e = intercept[IllegalArgumentException](Materialize.run(spark, sfDir, table))
+    assert(e.getMessage.contains("another-corpus"))
+    // not swallowed by the skip-and-remember policy
+    assert(TableIO.unparsedMonths(table).isEmpty)
+    assert(TableIO.uncommitted(table, Materialize.datesOfMonth(Synth.paramsFor(sfDir), 2022, 2))
+      .size == 28)
   }
 }

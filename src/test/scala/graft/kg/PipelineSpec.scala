@@ -45,11 +45,15 @@ class PipelineSpec extends AnyFunSuite {
     val pruned = Pipeline.dayDocs(spark, p, Some(Set("2022-01-05")))
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("Scan parquet"), s"no parquet scan in:\n$plan")
-    assert(plan.contains("PartitionFilters") && plan.contains("2022-01-05"),
-      s"partition filter not pushed to the scan:\n$plan")
+    // the scan lists only the requested partition directory, not the root
+    assert(plan.contains("InMemoryFileIndex(1 paths)") && plan.contains("part=2022-01-05"),
+      s"scan not pruned to the requested partition:\n$plan")
     assert(pruned.count() == 1) // exactly the one committed date survives
     // schema enforcement: the scan reads exactly the input_hint columns
     assert(pruned.schema.fieldNames.toSeq == Seq("doc_id", "spans"))
+    // a requested date without a day page yields no rows, alone or mixed in
+    assert(Pipeline.dayDocs(spark, p, Some(Set("2022-01-05", "2099-01-01"))).count() == 1)
+    assert(Pipeline.dayDocs(spark, p, Some(Set("2099-01-01"))).count() == 0)
   }
 
   test("span-sequence equality: the scanned table preserves (kind, text, media_ref, order) per row") {
