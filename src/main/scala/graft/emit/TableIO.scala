@@ -121,10 +121,16 @@ object TableIO {
     * partition files the write just produced (only the keys it rewrote, with
     * `partCol` typed as in `df`), so `df` is computed once, by the write, and
     * no slice-sized cache is held.
+    *
+    * @param rowsMetric a counter of `metricsFn` that is the key's row count;
+    *   when given, the manifest's row count is read from it, so the written
+    *   rows are aggregated once (by `metricsFn`) instead of twice. A
+    *   rewritten key without it fails the commit.
     */
   def replacePartitions(spark: SparkSession, table: String, df: DataFrame,
       partCol: String, keys: Seq[String],
-      metricsFn: DataFrame => Map[String, Map[String, Long]] = _ => Map.empty): Manifest = {
+      metricsFn: DataFrame => Map[String, Map[String, Long]] = _ => Map.empty,
+      rowsMetric: Option[String] = None): Manifest = {
     val prev = currentManifest(table)
     // Write-exchange spec: partition value PLUS a bounded salt. Keying the
     // exchange by the partition column alone puts one date on ONE task and
@@ -177,9 +183,14 @@ object TableIO {
         val written = spark0.read.schema(df.schema)
           .option("basePath", dataDir(table).toString)
           .parquet(keys.filter(rewritten.contains).map(partDir(_).toString): _*)
-        (written.groupBy(partCol).count().collect()
-          .map(r => r.get(0).toString -> r.getLong(1)).toMap,
-          metricsFn(written))
+        val lineage = metricsFn(written)
+        val counts = rowsMetric match {
+          case Some(m) => rewritten.keys.map(k =>
+            k -> lineage.getOrElse(k, Map.empty[String, Long])(m)).toMap
+          case None => written.groupBy(partCol).count().collect()
+            .map(r => r.get(0).toString -> r.getLong(1)).toMap
+        }
+        (counts, lineage)
       }
     val newParts = keys.map { k =>
       k -> PartitionMeta(k, counts.getOrElse(k, 0L), rewritten.get(k).fold(0)(_.size),

@@ -8,11 +8,21 @@ package graft.kg
   */
 object Emit {
 
-  /** Per-event view of a linked article (small projection joined onto event
-    * links; full article triples are emitted via the mentions path).
+  /** A day doc's view of one linked article: exactly the fields event and
+    * topic emission read (outputRdf.py:62-136), so the day-doc join moves
+    * this projection; full article triples are emitted via the mentions
+    * path.
     */
-  case class ArtLite(url: String, wdUri: Option[String], locationFlag: Boolean,
-      parentLocUris: Seq[String])
+  case class LinkedArticle(url: String, wdUri: Option[String], locationFlag: Boolean,
+      parentLocUris: Seq[String], classes: Seq[ClassLabel],
+      microDtstart: Option[String], microDtend: Option[String],
+      timeRows: Seq[IbTimeRow], dateRows: Seq[IbDateRow])
+
+  object LinkedArticle {
+    def of(a: EnrichedArticle): LinkedArticle = LinkedArticle(a.url, a.wdUri,
+      a.locationFlag, a.parentLocUris, a.classes, a.microDtstart, a.microDtend,
+      a.timeRows, a.dateRows)
+  }
 
   /** Per-doc view of a topic after article resolution (URI depends on the
     * resolved article, outputRdf.py:80-89).
@@ -58,7 +68,7 @@ object Emit {
 
   // ---- storeEvent (outputRdf.py:418-561) ----------------------------------
   def eventTriples(e: KEvent, topics: Map[Long, TopicInfo],
-      arts: Map[String, ArtLite]): Seq[Triple] = {
+      arts: Map[String, LinkedArticle]): Seq[Triple] = {
     val d = e.date
     val out = Seq.newBuilder[Triple]
     val eventUri = Uris.eventUri(d, e.eventIndex)
@@ -148,7 +158,7 @@ object Emit {
 
   // ---- storeTopic (outputRdf.py:564-612) -----------------------------------
   def topicTriples(t: KTopic, self: TopicInfo, topics: Map[Long, TopicInfo],
-      article: Option[EnrichedArticle]): Seq[Triple] = {
+      article: Option[LinkedArticle]): Seq[Triple] = {
     val d = t.date
     val out = Seq.newBuilder[Triple]
     val uri = self.uri

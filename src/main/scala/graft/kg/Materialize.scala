@@ -1,7 +1,7 @@
 package graft.kg
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.emit.TableIO
 
@@ -60,33 +60,44 @@ object Materialize {
     * counts from the committed slice plus the article date/time parse-error
     * counts the reference logs per run (analytics.py:120-184,
     * articleExtractor.py:50-63).
+    *
+    * The slice is counted by one two-level aggregate: per (event_date, subj)
+    * first, then per event_date, where each row is one distinct subject, so
+    * the distinct-subject counters are plain sums. `n_topics` adds its two
+    * prefix counts, so a subject under both prefixes counts twice.
+    * `n_triples` is the partition's row count: the committed path records
+    * it as the manifest row count instead of counting the slice again. The
+    * parse-error counts are collected on their own and merged here; a date
+    * without article mentions has 0 errors.
     */
-  def lineageMetrics(slice: org.apache.spark.sql.DataFrame,
-      errorsByDate: org.apache.spark.sql.DataFrame): Map[String, Map[String, Long]] = {
-    def nsCount(prefix: String) =
-      countDistinct(when(col("subj").startsWith(prefix), col("subj")))
-    val counters = slice.groupBy(col("event_date")).agg(
-      count(lit(1)).as("n_triples"),
-      countDistinct(col("subj")).as("n_subjects"),
-      sum(when(col("obj_is_iri"), 1L).otherwise(0L)).as("n_iri_objects"),
-      sum(when(col("graph_module") === "base", 1L).otherwise(0L)).as("n_base"),
-      sum(when(col("graph_module") === "raw", 1L).otherwise(0L)).as("n_raw"),
-      sum(when(col("graph_module") === "osm", 1L).otherwise(0L)).as("n_osm"),
-      sum(when(col("graph_module") === "ohg", 1L).otherwise(0L)).as("n_ohg"),
-      nsCount(Ns.events).as("n_events"),
-      (nsCount(Ns.textTopics) + nsCount(Ns.articleTopics)).as("n_topics"),
-      nsCount(Ns.wikipediaArticle).as("n_articles"),
-      nsCount(Ns.osmElement).as("n_osm_elements"),
-      nsCount(Ns.sentences).as("n_sentences"))
-    counters.join(errorsByDate, Seq("event_date"), "left")
-      .na.fill(0L)
-      .collect()
-      .map { r =>
-        val key = r.getString(r.fieldIndex("event_date"))
-        key -> r.schema.fieldNames.filter(_ != "event_date")
-          .map(f => f -> r.getLong(r.fieldIndex(f))).toMap
-      }.toMap
+  def lineageMetrics(slice: DataFrame, errorsByDate: DataFrame): Map[String, Map[String, Long]] = {
+    def ones(c: Column) = sum(when(c, 1L).otherwise(0L))
+    def module(m: String) = ones(col("graph_module") === m)
+    def subjects(prefix: String) = ones(col("subj").startsWith(prefix))
+    val perSubject = Seq("n_triples", "n_iri_objects", "n_base", "n_raw", "n_osm", "n_ohg")
+    val bySubj = slice.groupBy(col("event_date"), col("subj")).agg(
+      count(lit(1)).as("n_triples"), ones(col("obj_is_iri")).as("n_iri_objects"),
+      module("base").as("n_base"), module("raw").as("n_raw"),
+      module("osm").as("n_osm"), module("ohg").as("n_ohg"))
+    val counters = bySubj.groupBy(col("event_date")).agg(
+      count(lit(1)).as("n_subjects"),
+      (perSubject.map(c => sum(col(c)).as(c)) ++ Seq(
+        subjects(Ns.events).as("n_events"),
+        (subjects(Ns.textTopics) + subjects(Ns.articleTopics)).as("n_topics"),
+        subjects(Ns.wikipediaArticle).as("n_articles"),
+        subjects(Ns.osmElement).as("n_osm_elements"),
+        subjects(Ns.sentences).as("n_sentences"))): _*)
+    val errors = byDate(errorsByDate)
+    val noErrors = Map("n_time_parse_errors" -> 0L, "n_date_parse_errors" -> 0L)
+    byDate(counters).map { case (k, m) => k -> (m ++ errors.getOrElse(k, noErrors)) }
   }
+
+  /** event_date → (column → value) of a per-date frame of long columns. */
+  private def byDate(df: DataFrame): Map[String, Map[String, Long]] =
+    df.collect().map { r =>
+      r.getString(r.fieldIndex("event_date")) -> r.schema.fieldNames.filter(_ != "event_date")
+        .map(f => f -> r.getLong(r.fieldIndex(f))).toMap
+    }.toMap
 
   def datesOfMonth(p: Synth.Params, year: Int, month: Int): Seq[String] =
     Synth.allDaysOf(p).filter(x => x._1 == year && x._2 == month)
@@ -131,29 +142,37 @@ object Materialize {
     val jobGroup = s"graft-materialize-${System.nanoTime()}"
     val taskMs = new java.util.concurrent.atomic.LongAdder
     val groupStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    // the group's jobs whose start event has arrived and whose end has not
+    val running = scala.collection.mutable.Set.empty[Int]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (js.properties != null &&
-            jobGroup == js.properties.getProperty("spark.jobGroup.id"))
+            jobGroup == js.properties.getProperty("spark.jobGroup.id")) {
           js.stageIds.foreach(groupStages.add(_))
+          running.synchronized(running += js.jobId)
+        }
+      override def onJobEnd(
+          je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        running.synchronized(if (running.remove(je.jobId)) running.notifyAll())
       override def onTaskEnd(
           te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         if (te.taskInfo != null && groupStages.contains(te.stageId))
           taskMs.add(te.taskInfo.duration)
     }
-    // listener events arrive asynchronously on the bus; by read time every
-    // task has ENDED (the write action returned), only delivery lags — wait
-    // until the sum stabilizes so a month's tail tasks are not undercounted
-    // or attributed to the next month
-    def settledTaskMs(): Long = {
-      var prev = -1L
-      var cur = taskMs.sum
-      var waited = 0
-      while (cur != prev && waited < 2000) {
-        prev = cur; Thread.sleep(50); waited += 50; cur = taskMs.sum
-      }
-      cur
+    // listener events arrive asynchronously on the bus, in posting order, and
+    // a job's task-end events are posted before its job-end event: once every
+    // started job's end has arrived, every task of those jobs is counted, so
+    // none is missed or billed to the next month. (A job whose start event is
+    // still queued is not waited for: this relies on the bus delivering a
+    // start event within the run time of its job, which for the write and
+    // counting jobs is hundreds of milliseconds or more.) The deadline
+    // only guards against an end event the bus dropped (it drops events when
+    // a listener queue overflows), which would otherwise hang the backfill.
+    def settledTaskMs(): Long = running.synchronized {
+      val deadline = System.nanoTime + java.util.concurrent.TimeUnit.SECONDS.toNanos(60)
+      while (running.nonEmpty && System.nanoTime < deadline) running.wait(1000)
+      taskMs.sum
     }
     spark.sparkContext.addSparkListener(listener)
     spark.sparkContext.setJobGroup(jobGroup, "graft materialize", false)
@@ -164,8 +183,8 @@ object Materialize {
         val dates = datesOfMonth(p, year, month)
         val todo = TableIO.uncommitted(table, dates)
         if (todo.nonEmpty) {
-          // settle BEFORE starting the wall clock, so the up-to-2s delivery
-          // poll of the previous month is not billed to this one
+          // settle BEFORE starting the wall clock, so waiting for the
+          // previous month's events is not billed to this one
           val task0 = settledTaskMs()
           val t0 = System.nanoTime
           val articles = enriched // outside the skip policy: every month needs it
@@ -173,7 +192,7 @@ object Materialize {
             val b = buildFn(spark, p, todo.toSet, articles)
             try {
               TableIO.replacePartitions(spark, table, b.triples.toDF(), "event_date",
-                todo, metricsFn = slice => {
+                todo, rowsMetric = Some("n_triples"), metricsFn = slice => {
                   // called post-write: wall/task cover build + write of the month
                   val wallMs = math.max(1L, (System.nanoTime - t0) / 1000000L)
                   val monthTaskMs = math.max(0L, settledTaskMs() - task0)

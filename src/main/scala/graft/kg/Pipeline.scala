@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -9,24 +9,30 @@ import org.apache.spark.storage.StorageLevel
   *   docs(day pages)    —mapPartitions P1-P9→  ParsedDay(events, topics)
   *   docs(article pages)—mapPartitions P10-16→ ArticleRaw —dedup urls→
   *                      —broadcast dict joins J1-J7→ EnrichedArticle
-  *   per-doc article refs ⋈ articles —group by doc→ per-doc article map
-  *   ParsedDay ⋈ doc-article map —one flatMap→ event+topic triples
-  *                               —one flatMap→ article mentions (url, date)
+  *   per-doc article refs ⋈ articles' link projection (Emit.LinkedArticle)
+  *                      —collect_list by doc→ per-doc links (DocArts)
+  *   ParsedDay ⟕ per-doc links —one flatMap→ event+topic triples
+  *                             —one flatMap→ article mentions (url, date)
   *   mentions ⋈ articles —flatMap→ article/place/osm triples (+ child mentions)
   *   mentions ⋈ one-hop dictionary → ohg triples
   *   union → distinct → partitioned by (event_date, graph_module)
   *
-  * The whole day-page side costs three exchanges (ref distinct+group, the
-  * article join, the group-back by doc_id); the mention side three more
-  * (mention distinct, mention⋈articles, final distinct). Everything else is
-  * narrow mapPartitions work. Dictionaries broadcast; the one-hop join is the
-  * Zipf-skew hotspot and is AQE/salting-eligible (graft.plans.SaltedJoin is
-  * the shuffle-side fallback when the dictionary outgrows broadcast).
+  * The day-page side's exchanges (the ref⋈article join, the group by doc_id,
+  * the join back onto the day docs) move only the nine link fields emission
+  * reads, not the whole enriched article, and are columnar: the typed steps
+  * are the parse, the href flatMap and the two per-doc flatMaps. The mention
+  * side costs three exchanges (mention distinct, mention⋈articles, final
+  * distinct) and keeps the full article, which article triples read.
+  * Everything else is narrow mapPartitions work. Dictionaries broadcast; the
+  * one-hop join is the Zipf-skew hotspot and is AQE/salting-eligible
+  * (graft.plans.SaltedJoin is the shuffle-side fallback when the dictionary
+  * outgrows broadcast).
   */
 object Pipeline {
+  import Emit.LinkedArticle
 
   case class ParsedDay(doc_id: String, events: Seq[KEvent], topics: Seq[KTopic])
-  case class DocArts(doc_id: String, arts: Seq[(String, EnrichedArticle)])
+  case class DocArts(doc_id: String, arts: Seq[LinkedArticle])
   case class Mention(url: String, date: String, isTopic: Boolean,
       forcePlace: Boolean, traverseChildren: Boolean)
 
@@ -92,26 +98,27 @@ object Pipeline {
     (pd.events.flatMap(_.sentences.flatMap(_.links).map(_.href)) ++
       pd.topics.flatMap(_.linkHref)).distinct
 
-  /** In-row emission for one day doc with its resolved articles. */
-  def emitDoc(pd: ParsedDay, arts: Map[String, EnrichedArticle]): Seq[Triple] = {
+  /** In-row emission for one day doc with its resolved articles (by url). */
+  def emitDoc(pd: ParsedDay, arts: Map[String, LinkedArticle]): Seq[Triple] = {
     val infos: Map[Long, Emit.TopicInfo] = pd.topics.map { t =>
       val art = t.linkHref.flatMap(arts.get)
       val uri = art.map(a => Uris.articleTopicUri(a.url)).getOrElse(Uris.textTopicUri(t.text))
       t.topicId -> Emit.TopicInfo(t.topicId, uri, art.map(_.url),
         art.map(_.classes).getOrElse(Nil), t.parentTopicIds)
     }.toMap
-    val lite = arts.map { case (h, a) =>
-      h -> Emit.ArtLite(a.url, a.wdUri, a.locationFlag, a.parentLocUris)
-    }
-    pd.events.flatMap(e => Emit.eventTriples(e, infos, lite)) ++
+    pd.events.flatMap(e => Emit.eventTriples(e, infos, arts)) ++
       pd.topics.flatMap { t =>
         val info = infos(t.topicId)
         Emit.topicTriples(t, info, infos, t.linkHref.flatMap(arts.get))
       }
   }
 
+  /** A doc's resolved links by url (none when no link resolved). */
+  private def byUrl(da: DocArts): Map[String, LinkedArticle] =
+    if (da == null) Map.empty else da.arts.map(a => a.url -> a).toMap
+
   /** Depth-1 article mentions of one doc. */
-  def docMentions(pd: ParsedDay, arts: Map[String, EnrichedArticle]): Seq[Mention] = {
+  def docMentions(pd: ParsedDay, arts: Map[String, LinkedArticle]): Seq[Mention] = {
     val ev = pd.events.flatMap(e =>
       e.sentences.flatMap(_.links).map(_.href).distinct.flatMap(h =>
         arts.get(h).map(a => Mention(a.url, e.date, isTopic = false,
@@ -186,7 +193,7 @@ object Pipeline {
     // day-page corpus is parsed once, not twice
     val days = parsedDays(spark, p, onlyDates)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // three joins read the articles (doc resolution, child mentions, mention
+    // three joins read the articles (doc links, child mentions, mention
     // payloads): an in-memory enrichment is persisted so it runs once
     val (articles, enrichCaches) = enriched match {
       case Some(e) => (e, Nil)
@@ -196,25 +203,28 @@ object Pipeline {
         (persisted, persisted +: caches)
     }
 
-    // per-doc article resolution: one join, grouped back by doc_id
-    val refs = days.flatMap(pd => docHrefs(pd).map(h => (pd.doc_id, h)))
+    // per-doc article resolution: the refs join the articles' link
+    // projection (a column select, so a snapshot scan reads only those
+    // columns) and are collected per doc_id. The left join keeps docs
+    // without resolved links (null DocArts); the cache holds the pair as the
+    // join emits it, since a typed map here would re-encode every ParsedDay,
+    // the largest generated class of the build.
+    val linkCols = Encoders.product[LinkedArticle].schema.fieldNames.map(col)
+    val refs = days.flatMap(pd => docHrefs(pd).map(h => (pd.doc_id, h))).toDF("doc_id", "href")
     val docArts = refs
-      .joinWith(articles, refs("_2") === articles("url"))
-      .groupByKey(_._1._1)
-      .mapGroups((doc, it) => DocArts(doc, it.map(x => (x._1._2, x._2)).toSeq.sortBy(_._1)))
-
+      .join(articles.select(linkCols: _*), col("href") === col("url"))
+      .groupBy(col("doc_id"))
+      .agg(collect_list(struct(linkCols: _*)).as("arts"))
+      .as[DocArts]
     val docJoined = days
       .joinWith(docArts, days("doc_id") === docArts("doc_id"), "left_outer")
-      .map { case (pd, da) =>
-        (pd, if (da == null) Seq.empty[(String, EnrichedArticle)] else da.arts)
-      }
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val dayTriples = docJoined.flatMap { case (pd, arts) => emitDoc(pd, arts.toMap) }
+    val dayTriples = docJoined.flatMap { case (pd, da) => emitDoc(pd, byUrl(da)) }
 
     // ---- article mentions → article/place/osm triples -----------------------
     val depth1 = docJoined
-      .flatMap { case (pd, arts) => docMentions(pd, arts.toMap) }
+      .flatMap { case (pd, da) => docMentions(pd, byUrl(da)) }
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val childMentions = depth1
@@ -274,11 +284,12 @@ object Pipeline {
       .dropDuplicates() // D1: rdflib graph set semantics
 
     // lineage: article parse errors attributed to each mention date, one
-    // count per (date, article) — reads the mention cache (O5)
+    // count per (date, article) — reads the mention cache (O5) by column, so
+    // no article is decoded
     val errorsByDate = mentArts
-      .map { case (m, a) => (m.date, a.url, a.nTimeParseErrors, a.nDateParseErrors) }
+      .select(col("_1.date").as("event_date"), col("_2.url").as("url"),
+        col("_2.nTimeParseErrors").as("time_errs"), col("_2.nDateParseErrors").as("date_errs"))
       .distinct()
-      .toDF("event_date", "url", "time_errs", "date_errs")
       .groupBy(col("event_date"))
       .agg(sum(col("time_errs")).cast("long").as("n_time_parse_errors"),
         sum(col("date_errs")).cast("long").as("n_date_parse_errors"))

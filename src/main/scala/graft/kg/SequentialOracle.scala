@@ -45,7 +45,7 @@ object SequentialOracle {
       for (e <- events) {
         val arts = e.sentences.flatMap(_.links).map(_.href).distinct
           .flatMap(h => articles.get(h).map(a =>
-            h -> Emit.ArtLite(a.url, a.wdUri, a.locationFlag, a.parentLocUris)))
+            h -> Emit.LinkedArticle.of(a)))
           .toMap
         out ++= Emit.eventTriples(e, infos, arts)
         for (h <- e.sentences.flatMap(_.links).map(_.href).distinct if articles.contains(h))
@@ -53,7 +53,8 @@ object SequentialOracle {
       }
       for (t <- topics) {
         val info = infos(t.topicId)
-        out ++= Emit.topicTriples(t, info, infos, info.artUrl.map(articles))
+        out ++= Emit.topicTriples(t, info, infos,
+          info.artUrl.map(u => Emit.LinkedArticle.of(articles(u))))
         info.artUrl.foreach(u => mentions += ((u, t.date, true, false, true)))
       }
     }

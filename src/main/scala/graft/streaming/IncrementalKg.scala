@@ -48,7 +48,7 @@ object IncrementalKg {
           val b = Pipeline.trackedBuild(spark, p, Some(dates.toSet),
             Some(Materialize.enrichedSnapshot(spark, table, p)))
           TableIO.replacePartitions(spark, table, b.triples.toDF(),
-            "event_date", dates,
+            "event_date", dates, rowsMetric = Some("n_triples"),
             metricsFn = slice => Materialize.lineageMetrics(slice, b.articleErrorsByDate))
           b.releaseCaches()
         }

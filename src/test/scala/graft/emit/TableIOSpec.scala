@@ -67,4 +67,22 @@ class TableIOSpec extends AnyFunSuite {
     assert(m.partitions(d3).rows == 1L)
     assert(committed(table) == Set(("a", 1L, d1), ("b", 2L, d1), ("c", 3L, d2), ("old", 0L, d3)))
   }
+
+  test("rowsMetric: the row count is read from a metric every rewritten key must carry") {
+    val table = Files.createTempDirectory("graft_tableio_rows").toString
+    val input = df(Seq(("a", 1L, d1), ("b", 2L, d1), ("c", 3L, d2)))
+    val m = TableIO.replacePartitions(spark, table, input, "event_date", Seq(d1, d2),
+      metricsFn = slice => slice.groupBy("event_date").count().collect()
+        .map(r => r.getString(0) -> Map("n" -> r.getLong(1))).toMap,
+      rowsMetric = Some("n"))
+    assert(m.partitions(d1).rows == 2L && m.partitions(d1).metrics == Map("n" -> 2L))
+    assert(m.partitions(d2).rows == 1L && m.partitions(d2).metrics == Map("n" -> 1L))
+    // a key without the metric fails the commit instead of recording 0 rows
+    intercept[NoSuchElementException] {
+      TableIO.replacePartitions(spark, table, input, "event_date", Seq(d1, d2),
+        metricsFn = _ => Map(d1 -> Map("n" -> 2L)),
+        rowsMetric = Some("n"))
+    }
+    assert(TableIO.currentManifest(table) == m)
+  }
 }

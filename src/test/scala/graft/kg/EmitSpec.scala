@@ -32,12 +32,16 @@ class EmitSpec extends AnyFunSuite {
     Some("https://en.wikipedia.org/wiki/Storm_q"),
     Seq(ClassLabel("Q7", "instance class 7")), Nil)
 
-  private val artLite = Emit.ArtLite("https://en.wikipedia.org/wiki/CityX",
-    Some(Ns.WD + "Q205"), locationFlag = true, parentLocUris = Nil)
+  /** The fixture article's link view, with the fields event emission reads. */
+  private def link(url: String, wd: String, located: Boolean,
+      parents: Seq[String] = Nil): Emit.LinkedArticle =
+    Emit.LinkedArticle.of(mkArticle(url).copy(wdUri = Some(wd), locationFlag = located,
+      parentLocUris = parents))
 
   test("storeEvent golden shapes") {
     val got = Emit.eventTriples(mkEvent, Map(0L -> topicInfo),
-      Map("https://en.wikipedia.org/wiki/CityX" -> artLite)).toSet
+      Map("https://en.wikipedia.org/wiki/CityX" ->
+        link("https://en.wikipedia.org/wiki/CityX", Ns.WD + "Q205", located = true))).toSet
 
     def iri(s: String, p: String, o: String) = Triple("base", s, p, o, true, null, null, d)
     def str(s: String, p: String, o: String) = Triple("base", s, p, o, false, Ns.xsdString, null, d)
@@ -127,12 +131,10 @@ class EmitSpec extends AnyFunSuite {
     // (located article in the same event — linked), TownY's wd (linked in
     // the event but NOT location-flagged — excluded), Q777 (not in the
     // event at all — excluded)
-    val city = Emit.ArtLite(cityUrl, Some(Ns.WD + "Q205"), locationFlag = true,
-      parentLocUris = Seq(Ns.WD + "Q205", Ns.WD + "Q999", Ns.WD + "Q555", Ns.WD + "Q777"))
-    val country = Emit.ArtLite(countryUrl, Some(Ns.WD + "Q999"),
-      locationFlag = true, parentLocUris = Nil)
-    val town = Emit.ArtLite(townUrl, Some(Ns.WD + "Q555"),
-      locationFlag = false, parentLocUris = Nil)
+    val city = link(cityUrl, Ns.WD + "Q205", located = true,
+      parents = Seq(Ns.WD + "Q205", Ns.WD + "Q999", Ns.WD + "Q555", Ns.WD + "Q777"))
+    val country = link(countryUrl, Ns.WD + "Q999", located = true)
+    val town = link(townUrl, Ns.WD + "Q555", located = false)
     val got = Emit.eventTriples(e, Map(0L -> topicInfo),
       Map(cityUrl -> city, countryUrl -> country, townUrl -> town)).toSet
     val located = got.filter(_.pred == Ns.COY + "isLocatedIn")
@@ -167,7 +169,8 @@ class EmitSpec extends AnyFunSuite {
     val t = KTopic("day:2022-01-05", 0L, d, 1, "Storm q", Some(url),
       parentTopicIds = Seq(7L), sourceUrl = "src", raw = "[raw-t]")
     val self = Emit.TopicInfo(0L, topicUri, Some(url), Nil, Seq(7L))
-    val got = Emit.topicTriples(t, self, Map(7L -> parent), Some(mkArticle(url))).toSet
+    val got = Emit.topicTriples(t, self, Map(7L -> parent),
+      Some(Emit.LinkedArticle.of(mkArticle(url)))).toSet
 
     def iri(s: String, p: String, o: String) = Triple("base", s, p, o, true, null, null, d)
     def str(s: String, p: String, o: String) = Triple("base", s, p, o, false, Ns.xsdString, null, d)
@@ -263,7 +266,7 @@ class EmitSpec extends AnyFunSuite {
     val topicUri = Uris.articleTopicUri(url)
     val self = Emit.TopicInfo(0L, topicUri, Some(url), Nil, Nil)
     val t = KTopic("day:2022-01-05", 0L, d, 1, "Storm q", Some(url), Nil, "src", "[raw-t]")
-    val got = Emit.topicTriples(t, self, Map.empty, Some(a)).toSet
+    val got = Emit.topicTriples(t, self, Map.empty, Some(Emit.LinkedArticle.of(a))).toSet
       .filter(tr => tr.pred == Ns.COY + "hasTimespan" || tr.subj.startsWith(Ns.timespan))
 
     val ts = Uris.timespanUri(Some("2022-01-05 13:30:00"), Some("2022-01-05 13:30:00"),
@@ -297,7 +300,7 @@ class EmitSpec extends AnyFunSuite {
     val topicUri = Uris.articleTopicUri(url)
     val self = Emit.TopicInfo(0L, topicUri, Some(url), Nil, Nil)
     val t = KTopic("day:2022-01-05", 0L, d, 1, "Storm q", Some(url), Nil, "src", "[raw-t]")
-    val got = Emit.topicTriples(t, self, Map.empty, Some(a)).toSet
+    val got = Emit.topicTriples(t, self, Map.empty, Some(Emit.LinkedArticle.of(a))).toSet
       .filter(tr => tr.pred == Ns.COY + "hasTimespan" || tr.subj.startsWith(Ns.timespan))
 
     val ts = Uris.timespanUri(Some("2022-01-17 14:29:00+04:00"),
@@ -326,7 +329,7 @@ class EmitSpec extends AnyFunSuite {
     val topicUri = Uris.articleTopicUri(url)
     val self = Emit.TopicInfo(0L, topicUri, Some(url), Nil, Nil)
     val t = KTopic("day:2022-01-05", 0L, d, 1, "Storm q", Some(url), Nil, "src", "[raw-t]")
-    val got = Emit.topicTriples(t, self, Map.empty, Some(a)).toSet
+    val got = Emit.topicTriples(t, self, Map.empty, Some(Emit.LinkedArticle.of(a))).toSet
       .filter(tr => tr.pred == Ns.COY + "hasTimespan" || tr.subj.startsWith(Ns.timespan))
 
     val ts = Uris.timespanUri(None, None, ongoing = false, Some("13:05:00"), None, None)

@@ -62,6 +62,50 @@ class MaterializeSpec extends AnyFunSuite {
     assert(TableIO.currentManifest(table).partitions("2022-01-05").metrics == metrics)
   }
 
+  test("every lineage counter equals a plain recount of the committed rows") {
+    val table = Files.createTempDirectory("graft_triples_counters").toString
+    val p = Synth.paramsFor(sfDir)
+    // both months: only February has an article with parse errors that is
+    // mentioned twice on one date (by two mention paths), which the error
+    // counters must count once
+    Materialize.run(spark, sfDir, table)
+    val parts = TableIO.currentManifest(table).partitions
+    val rows = TableIO.read(spark, table, "event_date")
+      .selectExpr("graph_module", "subj", "pred", "obj", "obj_is_iri",
+        "obj_dtype", "obj_lang", "CAST(event_date AS STRING) AS event_date")
+      .as[Triple](spark.implicits.newProductEncoder[Triple])
+      .collect().groupBy(_.event_date)
+    val errors = Materialize.enrichedSnapshot(spark, table, p).collect()
+      .map(a => a.url -> (a.nTimeParseErrors.toLong, a.nDateParseErrors.toLong)).toMap
+    assert(rows.keySet == parts.keySet && rows.size == 59)
+    for ((date, ts) <- rows) {
+      def subjects(prefix: String) = ts.map(_.subj).distinct.count(_.startsWith(prefix)).toLong
+      def module(m: String) = ts.count(_.graph_module == m).toLong
+      // each (date, article) mention emits <article> dcterms:source <url>
+      val mentioned = ts.filter(t => t.subj.startsWith(Ns.wikipediaArticle) &&
+        t.pred == Ns.DCTERMS + "source").map(_.obj).distinct
+      val expected = Map(
+        "n_triples" -> ts.length.toLong,
+        "n_subjects" -> ts.map(_.subj).distinct.length.toLong,
+        "n_iri_objects" -> ts.count(_.obj_is_iri).toLong,
+        "n_base" -> module("base"), "n_raw" -> module("raw"),
+        "n_osm" -> module("osm"), "n_ohg" -> module("ohg"),
+        "n_events" -> subjects(Ns.events),
+        "n_topics" -> (subjects(Ns.textTopics) + subjects(Ns.articleTopics)),
+        "n_articles" -> subjects(Ns.wikipediaArticle),
+        "n_osm_elements" -> subjects(Ns.osmElement),
+        "n_sentences" -> subjects(Ns.sentences),
+        "n_time_parse_errors" -> mentioned.map(errors(_)._1).sum,
+        "n_date_parse_errors" -> mentioned.map(errors(_)._2).sum)
+      val got = parts(date).metrics
+      assert(got.view.filterKeys(expected.keySet).toMap == expected, s"at $date")
+      assert(parts(date).rows == ts.length)
+    }
+    // the error counters are exercised, not all zero
+    assert(parts.values.exists(_.metrics("n_time_parse_errors") > 0))
+    assert(parts.values.exists(_.metrics("n_date_parse_errors") > 0))
+  }
+
   test("idempotence: a second run over a complete snapshot commits nothing") {
     val table = Files.createTempDirectory("graft_triples2").toString
     Materialize.run(spark, sfDir, table)

@@ -1,6 +1,7 @@
 package graft.kg
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 class PipelineSpec extends AnyFunSuite {
@@ -54,6 +55,33 @@ class PipelineSpec extends AnyFunSuite {
     // a requested date without a day page yields no rows, alone or mixed in
     assert(Pipeline.dayDocs(spark, p, Some(Set("2022-01-05", "2099-01-01"))).count() == 1)
     assert(Pipeline.dayDocs(spark, p, Some(Set("2099-01-01"))).count() == 0)
+  }
+
+  /** Every field name in `t`, nested ones included. */
+  private def fieldNames(t: DataType): Seq[String] = t match {
+    case s: StructType => s.fields.toSeq.flatMap(f => f.name +: fieldNames(f.dataType))
+    case a: ArrayType => fieldNames(a.elementType)
+    case m: MapType => fieldNames(m.keyType) ++ fieldNames(m.valueType)
+    case _ => Nil
+  }
+
+  test("the persisted per-doc join holds only the link fields day-doc emission reads") {
+    val p = Synth.paramsFor("sf0.001")
+    val b = Pipeline.trackedBuild(spark, p, Some(Set("2022-01-05")))
+    try {
+      // (ParsedDay, DocArts): the one cached pair whose left side is a day doc
+      val perDoc = b.caches.map(_.schema).filter(s =>
+        s.fieldNames.toSeq == Seq("_1", "_2") && fieldNames(s("_1").dataType).contains("events"))
+      assert(perDoc.size == 1, s"expected one per-doc frame among ${b.caches.map(_.schema)}")
+      val arts = perDoc.head("_2").dataType.asInstanceOf[StructType]("arts")
+      val link = arts.dataType.asInstanceOf[ArrayType].elementType
+      assert(link.asInstanceOf[StructType].fieldNames.toSeq == Seq("url", "wdUri",
+        "locationFlag", "parentLocUris", "classes", "microDtstart", "microDtend",
+        "timeRows", "dateRows"))
+      val all = fieldNames(perDoc.head)
+      for (wide <- Seq("rawInfobox", "osmElements", "locLinkWkts", "childUrls", "falconEntityUris"))
+        assert(!all.contains(wide), s"$wide widened the per-doc join")
+    } finally b.releaseCaches()
   }
 
   test("span-sequence equality: the scanned table preserves (kind, text, media_ref, order) per row") {
