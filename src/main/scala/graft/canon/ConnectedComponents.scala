@@ -34,42 +34,46 @@ object ConnectedComponents {
     val sym = edges.select(col(src).as("u"), col(dst).as("v"))
       .union(edges.select(col(dst).as("u"), col(src).as("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // init: component = min(self, direct neighbors); every node appears as
-    // `u` in the symmetrized edge list.
-    var assign = sym.groupBy(col("u").as("node"))
-      .agg(min(col("v")).as("mv"))
-      .select(col("node"), least(col("node"), col("mv")).as("comp"))
-      .localCheckpoint(eager = true)
-
+    var assign: DataFrame = null
     var converged = false
     var it = 0
-    // maxIter + 1 total rounds: convergence is only OBSERVED by the
-    // no-change round after the last productive one, so a labeling that
-    // needs exactly maxIter productive rounds must get its confirming round
-    // instead of being rejected at the boundary (same off-by-one class as
-    // Reach.closure's productive-round guard)
-    while (!converged && it < maxIter + 1) {
-      // 1-hop propagation: comp'(n) = min(comp(n), min_{v∈N(n)} comp(v));
-      // the previous assignment rides along so convergence is a filter on
-      // the checkpointed result, not a join + recompute
-      val viaNbr = sym.join(assign.withColumnRenamed("node", "v"), Seq("v"))
-        .groupBy(col("u").as("node")).agg(min(col("comp")).as("nbr_comp"))
-      val prop = assign.withColumnRenamed("comp", "prev")
-        .join(viaNbr, Seq("node"), "left")
-        .select(col("node"), col("prev"),
-          least(col("prev"), coalesce(col("nbr_comp"), col("prev"))).as("comp"))
-      // pointer jump: comp''(n) = comp'(comp'(n))  (comp'(m) <= m always)
-      val jump = prop.as("x")
-        .join(prop.select(col("node").as("comp"), col("comp").as("jcomp")).as("y"),
-          Seq("comp"), "left")
-        .select(col("node"), col("prev"),
-          coalesce(col("jcomp"), col("comp")).as("comp"))
+    // finally: a failed round job must not leave the edge list cached for
+    // the session (same failure-path hygiene as the other cache builders)
+    try {
+      // init: component = min(self, direct neighbors); every node appears as
+      // `u` in the symmetrized edge list.
+      assign = sym.groupBy(col("u").as("node"))
+        .agg(min(col("v")).as("mv"))
+        .select(col("node"), least(col("node"), col("mv")).as("comp"))
         .localCheckpoint(eager = true)
-      converged = jump.filter(col("comp") =!= col("prev")).limit(1).isEmpty
-      assign = jump.select(col("node"), col("comp"))
-      it += 1
-    }
-    sym.unpersist(blocking = false)
+
+      // maxIter + 1 total rounds: convergence is only OBSERVED by the
+      // no-change round after the last productive one, so a labeling that
+      // needs exactly maxIter productive rounds must get its confirming round
+      // instead of being rejected at the boundary (same off-by-one class as
+      // Reach.closure's productive-round guard)
+      while (!converged && it < maxIter + 1) {
+        // 1-hop propagation: comp'(n) = min(comp(n), min_{v∈N(n)} comp(v));
+        // the previous assignment rides along so convergence is a filter on
+        // the checkpointed result, not a join + recompute
+        val viaNbr = sym.join(assign.withColumnRenamed("node", "v"), Seq("v"))
+          .groupBy(col("u").as("node")).agg(min(col("comp")).as("nbr_comp"))
+        val prop = assign.withColumnRenamed("comp", "prev")
+          .join(viaNbr, Seq("node"), "left")
+          .select(col("node"), col("prev"),
+            least(col("prev"), coalesce(col("nbr_comp"), col("prev"))).as("comp"))
+        // pointer jump: comp''(n) = comp'(comp'(n))  (comp'(m) <= m always)
+        val jump = prop.as("x")
+          .join(prop.select(col("node").as("comp"), col("comp").as("jcomp")).as("y"),
+            Seq("comp"), "left")
+          .select(col("node"), col("prev"),
+            coalesce(col("jcomp"), col("comp")).as("comp"))
+          .localCheckpoint(eager = true)
+        converged = jump.filter(col("comp") =!= col("prev")).limit(1).isEmpty
+        assign = jump.select(col("node"), col("comp"))
+        it += 1
+      }
+    } finally sym.unpersist(blocking = false)
     graft.plans.Meters.set("cc.rounds", it.toLong)
     // pointer jumping halves the tree height per round: 30 rounds cover any
     // component with diameter < 2^30. If we ever DO hit the cap, the

@@ -1,7 +1,7 @@
 package graft.kg
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, collect_set, sort_array}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_set, sort_array}
 
 /** Enriched article after the dictionary joins J1-J7 (SURVEY.md §2.4):
   * Wikidata P31 classes + labels, parent locations, OSM elements (via
@@ -274,11 +274,14 @@ object Enrich {
     val kids = falconKids.unionByName(linkKids)
       .groupBy(col("url"))
       .agg(sort_array(collect_set(col("child"))).as("children")) // = distinct.sorted
-      .select(col("url").as("_1"), col("children").as("_2"))
-      .as[(String, Seq[String])]
 
-    val out = assembled.joinWith(kids, assembled("url") === kids("_1"), "left_outer")
-      .map { case (e, k) => if (k == null) e else e.copy(childUrls = k._2) }
+    // the children replace the assembled (empty) childUrls by column: a typed
+    // map here would decode and re-encode every enriched article
+    val fields = Encoders.product[EnrichedArticle].schema.fieldNames
+    val out = assembled.join(kids, Seq("url"), "left_outer")
+      .withColumn("childUrls", coalesce(col("children"), col("childUrls")))
+      .select(fields.map(col): _*)
+      .as[EnrichedArticle]
     (out, Seq(pre))
   }
 

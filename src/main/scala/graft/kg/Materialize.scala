@@ -61,43 +61,59 @@ object Materialize {
     * counts the reference logs per run (analytics.py:120-184,
     * articleExtractor.py:50-63).
     *
-    * The slice is counted by one two-level aggregate: per (event_date, subj)
-    * first, then per event_date, where each row is one distinct subject, so
-    * the distinct-subject counters are plain sums. `n_topics` adds its two
-    * prefix counts, so a subject under both prefixes counts twice.
-    * `n_triples` is the partition's row count: the committed path records
-    * it as the manifest row count instead of counting the slice again. The
-    * parse-error counts are collected on their own and merged here; a date
+    * Everything is one aggregation job over the slice. Per (event_date,
+    * subj) first, where each row is one distinct subject, so the
+    * distinct-subject counters are plain sums of the per-date level.
+    * `n_topics` adds its two prefix counts, so a subject under both prefixes
+    * counts twice. `n_triples` is the partition's row count: the committed
+    * path records it as the manifest row count instead of counting the
+    * slice again.
+    *
+    * The parse errors are read off the slice too: every article mention
+    * emits `<article> dcterms:source <url>` on its date, and the slice is a
+    * set, so its source rows are the distinct (date, article url) mentions.
+    * They join the articles' two error columns (a shuffled hash join: the
+    * article side can be as large as the corpus, and a broadcast would add a
+    * job) and enter the per-date level as rows without a subject. A date
     * without article mentions has 0 errors.
+    *
+    * @param articles the enriched articles the slice was built from
     */
-  def lineageMetrics(slice: DataFrame, errorsByDate: DataFrame): Map[String, Map[String, Long]] = {
+  def lineageMetrics(slice: DataFrame,
+      articles: Dataset[EnrichedArticle]): Map[String, Map[String, Long]] = {
     def ones(c: Column) = sum(when(c, 1L).otherwise(0L))
     def module(m: String) = ones(col("graph_module") === m)
     def subjects(prefix: String) = ones(col("subj").startsWith(prefix))
     val perSubject = Seq("n_triples", "n_iri_objects", "n_base", "n_raw", "n_osm", "n_ohg")
+    val errorCols = Seq("n_time_parse_errors", "n_date_parse_errors")
     val bySubj = slice.groupBy(col("event_date"), col("subj")).agg(
       count(lit(1)).as("n_triples"), ones(col("obj_is_iri")).as("n_iri_objects"),
       module("base").as("n_base"), module("raw").as("n_raw"),
       module("osm").as("n_osm"), module("ohg").as("n_ohg"))
-    val counters = bySubj.groupBy(col("event_date")).agg(
-      count(lit(1)).as("n_subjects"),
-      (perSubject.map(c => sum(col(c)).as(c)) ++ Seq(
+      .select(col("*") +: errorCols.map(lit(0L).as(_)): _*)
+    val errors = slice
+      .filter(col("pred") === Ns.DCTERMS + "source" && col("subj").startsWith(Ns.wikipediaArticle))
+      .select(col("event_date"), col("obj").as("url"))
+      .join(articles.select(col("url"), col("nTimeParseErrors"), col("nDateParseErrors"))
+        .filter(col("nTimeParseErrors") + col("nDateParseErrors") > 0)
+        .hint("shuffle_hash"), "url")
+      .select(col("event_date") +: lit(null).cast("string").as("subj") +:
+        (perSubject.map(lit(0L).as(_)) ++ Seq(
+          col("nTimeParseErrors").cast("long").as(errorCols(0)),
+          col("nDateParseErrors").cast("long").as(errorCols(1)))): _*)
+    val counters = bySubj.unionByName(errors).groupBy(col("event_date")).agg(
+      count(col("subj")).as("n_subjects"),
+      (perSubject.map(c => sum(col(c)).as(c)) ++ errorCols.map(c => sum(col(c)).as(c)) ++ Seq(
         subjects(Ns.events).as("n_events"),
         (subjects(Ns.textTopics) + subjects(Ns.articleTopics)).as("n_topics"),
         subjects(Ns.wikipediaArticle).as("n_articles"),
         subjects(Ns.osmElement).as("n_osm_elements"),
         subjects(Ns.sentences).as("n_sentences"))): _*)
-    val errors = byDate(errorsByDate)
-    val noErrors = Map("n_time_parse_errors" -> 0L, "n_date_parse_errors" -> 0L)
-    byDate(counters).map { case (k, m) => k -> (m ++ errors.getOrElse(k, noErrors)) }
-  }
-
-  /** event_date → (column → value) of a per-date frame of long columns. */
-  private def byDate(df: DataFrame): Map[String, Map[String, Long]] =
-    df.collect().map { r =>
+    counters.collect().map { r =>
       r.getString(r.fieldIndex("event_date")) -> r.schema.fieldNames.filter(_ != "event_date")
         .map(f => f -> r.getLong(r.fieldIndex(f))).toMap
     }.toMap
+  }
 
   def datesOfMonth(p: Synth.Params, year: Int, month: Int): Seq[String] =
     Synth.allDaysOf(p).filter(x => x._1 == year && x._2 == month)
@@ -201,7 +217,7 @@ object Materialize {
                     "month_task_ms" -> monthTaskMs,
                     "avg_day_wall_ms" -> wallMs / todo.size,
                     "avg_day_task_ms" -> monthTaskMs / todo.size)
-                  lineageMetrics(slice, b.articleErrorsByDate)
+                  lineageMetrics(slice, articles)
                     .map { case (k, mm) => k -> (mm ++ timing) }
                 })
               committed += todo.size

@@ -1,32 +1,33 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** The KG-construction dataflow (SURVEY.md §3.1 Spark shape):
   *
-  *   docs(day pages)    —mapPartitions P1-P9→  ParsedDay(events, topics)
-  *   docs(article pages)—mapPartitions P10-16→ ArticleRaw —dedup urls→
+  *   docs(day pages)    —map P1-P9→  ParsedDay(events, topics)
+  *   docs(article pages)—flatMap P10-16→ ArticleRaw —dedup urls→
   *                      —broadcast dict joins J1-J7→ EnrichedArticle
   *   per-doc article refs ⋈ articles' link projection (Emit.LinkedArticle)
   *                      —collect_list by doc→ per-doc links (DocArts)
-  *   ParsedDay ⟕ per-doc links —one flatMap→ event+topic triples
-  *                             —one flatMap→ article mentions (url, date)
-  *   mentions ⋈ articles —flatMap→ article/place/osm triples (+ child mentions)
-  *   mentions ⋈ one-hop dictionary → ohg triples
+  *   ParsedDay ⟕ per-doc links —map + explode→ event+topic triples
+  *                             —map + explode→ article mentions (url, date)
+  *   mentions ⋈ articles —map + explode→ article/place/osm triples
+  *                         (+ child mentions, + one probe row per entity)
+  *   entity probes ⟕ one-hop dictionary → ohg triples
   *   union → distinct → partitioned by (event_date, graph_module)
   *
-  * The day-page side's exchanges (the ref⋈article join, the group by doc_id,
-  * the join back onto the day docs) move only the nine link fields emission
-  * reads, not the whole enriched article, and are columnar: the typed steps
-  * are the parse, the href flatMap and the two per-doc flatMaps. The mention
-  * side costs three exchanges (mention distinct, mention⋈articles, final
-  * distinct) and keeps the full article, which article triples read.
-  * Everything else is narrow mapPartitions work. Dictionaries broadcast; the
-  * one-hop join is the Zipf-skew hotspot and is AQE/salting-eligible
-  * (graft.plans.SaltedJoin is the shuffle-side fallback when the dictionary
-  * outgrows broadcast).
+  * The day-page side's exchanges (the group by doc_id, the join back onto
+  * the day docs) move only the nine link fields emission reads, not the
+  * whole enriched article, and are columnar: the typed steps are the parse
+  * and three maps over the day docs (hrefs, day triples, mentions). The
+  * mention side costs two exchanges before the final distinct (depth-1 and
+  * all mentions) and keeps the full article, which article triples read.
+  * Dictionaries broadcast; the one-hop join is the Zipf-skew hotspot and is
+  * AQE/salting-eligible (graft.plans.SaltedJoin is the shuffle-side fallback
+  * when the dictionary outgrows broadcast).
   */
 object Pipeline {
   import Emit.LinkedArticle
@@ -138,13 +139,18 @@ object Pipeline {
     triplesTracked(spark, p, onlyDates)._1
 
   /** Build + persist + materialize the triple table, then release the
-    * intermediate stage caches (articles / doc-join / mentions) the build
+    * intermediate stage caches (parsed days / doc join / articles) the build
     * holds — long-lived consumers (KgPipeline's query cache, benches) keep
-    * only the one result cache instead of leaking four.
+    * only the one result cache instead of leaking them.
+    *
+    * @param enriched the enriched articles the build joins against, held
+    *   by the caller (KgPipeline's session leaf), so the build does not
+    *   enrich again
     */
   def materializedTriples(spark: SparkSession, sfDir: String,
+      enriched: Dataset[EnrichedArticle],
       onlyDates: Option[Set[String]] = None): Dataset[Triple] = {
-    val b = trackedBuild(spark, Synth.paramsFor(sfDir), onlyDates)
+    val b = trackedBuild(spark, Synth.paramsFor(sfDir), onlyDates, Some(enriched))
     // localCheckpoint, not persist: materializes the same MEMORY_AND_DISK
     // blocks AND truncates the logical plan to a leaf. The full build plan
     // is hundreds of nodes; downstream kg queries embed up to ~8 copies of
@@ -162,11 +168,9 @@ object Pipeline {
   }
 
   /** A triple build plus the stage caches it holds (released by the caller
-    * once the result is materialized) and the per-date article parse-error
-    * lineage (cheap to aggregate while the mention cache is still hot).
+    * once the result is materialized).
     */
-  case class Build(triples: Dataset[Triple], caches: Seq[Dataset[_]],
-      articleErrorsByDate: DataFrame) {
+  case class Build(triples: Dataset[Triple], caches: Seq[Dataset[_]]) {
     def releaseCaches(): Unit = caches.foreach(_.unpersist(blocking = false))
   }
 
@@ -176,13 +180,39 @@ object Pipeline {
     (b.triples, b.caches)
   }
 
+  /** `ds.flatMap(f)` planned as a typed map to a Seq plus `explode`: the
+    * map and the generator fuse into one whole-stage codegen stage with their
+    * neighbours, where a typed flatMap is an uncompiled MapPartitions that
+    * ends the stage below it, starts a new one above it and compiles its own
+    * deserializer projection.
+    */
+  private def flatMapFused[T, U <: Product: TypeTag](ds: Dataset[T])(f: T => Seq[U]): Dataset[U] = {
+    import ds.sparkSession.implicits._
+    ds.map(f).select(explode(col("value")).as("x")).select(col("x.*")).as[U]
+  }
+
   /** The triple build over the day pages of `onlyDates` (all when None).
+    *
+    * The plan is kept small on purpose, because every distinct generated
+    * class of a month build is one entry of Spark's codegen cache (100 by
+    * default) and a backfill runs this build once per month:
+    *  - the per-row steps are typed maps fused with `explode`
+    *    ([[flatMapFused]]), never an uncompiled flatMap;
+    *  - the one-hop join runs inside the article emission stage, on probe
+    *    rows the emission adds, instead of as a second pass over the
+    *    mention ⋈ article join;
+    *  - only the two frames whose consumers would otherwise recompute them
+    *    are persisted (the parsed days and the per-doc join). The depth-1
+    *    mentions feed two consumers too, but both read the exchange of
+    *    their distinct, and the two joins with the full articles read one
+    *    exchange of them: the plan reuses each instead of recomputing it.
     *
     * @param enriched the enriched-article frame the build joins against.
     *   None (the default) enriches the whole article corpus in memory for
-    *   this build; the committed write path passes the table's enriched
-    *   snapshot ([[Materialize.enrichedSnapshot]]) so a backfill enriches
-    *   once, not once per month.
+    *   this build and persists it; the committed write path passes the
+    *   table's enriched snapshot ([[Materialize.enrichedSnapshot]]) and the
+    *   serving path its cached enrichment leaf, so each enriches once, not
+    *   once per build.
     */
   def trackedBuild(spark: SparkSession, p: Synth.Params,
       onlyDates: Option[Set[String]] = None,
@@ -206,43 +236,47 @@ object Pipeline {
     // per-doc article resolution: the refs join the articles' link
     // projection (a column select, so a snapshot scan reads only those
     // columns) and are collected per doc_id. The left join keeps docs
-    // without resolved links (null DocArts); the cache holds the pair as the
-    // join emits it, since a typed map here would re-encode every ParsedDay,
+    // without resolved links (null DocArts); the pair is assembled by a
+    // column select, since a typed map here would re-encode every ParsedDay,
     // the largest generated class of the build.
     val linkCols = Encoders.product[LinkedArticle].schema.fieldNames.map(col)
-    val refs = days.flatMap(pd => docHrefs(pd).map(h => (pd.doc_id, h))).toDF("doc_id", "href")
+    val refs = days.map(pd => (pd.doc_id, docHrefs(pd)))
+      .select(col("_1").as("doc_id"), explode(col("_2")).as("href"))
     val docArts = refs
       .join(articles.select(linkCols: _*), col("href") === col("url"))
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(linkCols: _*)).as("arts"))
-      .as[DocArts]
-    val docJoined = days
-      .joinWith(docArts, days("doc_id") === docArts("doc_id"), "left_outer")
+    // a join on the plain doc_id keeps docArts in the partitioning its
+    // aggregate left it in (a typed joinWith keys on `_2.doc_id` and
+    // re-shuffles it). Hashed, not sorted: the build side holds one row per
+    // day page, i.e. per calendar day of the build.
+    val docJoined = days.join(docArts.hint("shuffle_hash"), Seq("doc_id"), "left_outer")
+      .select(struct(days.columns.map(col): _*).as("_1"),
+        when(col("arts").isNotNull, struct(col("doc_id"), col("arts"))).as("_2"))
+      .as[(ParsedDay, DocArts)]
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val dayTriples = docJoined.flatMap { case (pd, da) => emitDoc(pd, byUrl(da)) }
+    val dayTriples = flatMapFused(docJoined) { case (pd, da) => emitDoc(pd, byUrl(da)) }
 
     // ---- article mentions → article/place/osm triples -----------------------
-    val depth1 = docJoined
-      .flatMap { case (pd, da) => docMentions(pd, byUrl(da)) }
+    val depth1 = flatMapFused(docJoined) { case (pd, da) => docMentions(pd, byUrl(da)) }
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val childMentions = depth1
-      .joinWith(articles, depth1("url") === articles("url"))
-      .flatMap { case (m, a) =>
+    val childMentions = flatMapFused(depth1.joinWith(articles, depth1("url") === articles("url"))) {
+      case (m, a) =>
         val hasPlace = a.locationFlag || m.isTopic || m.forcePlace
         if (hasPlace)
           a.childUrls.map(c => Mention(c, m.date, isTopic = false,
             forcePlace = true, traverseChildren = false))
         else Nil
-      }
+    }
     val mentions = depth1.union(childMentions).distinct()
-    // one join, two consumers (article triples + ohg probe)
-    val mentArts = mentions
-      .joinWith(articles, mentions("url") === articles("url"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val articleTriples = mentArts.flatMap { case (m, a) =>
-      Emit.articleTriples(a, m.date, m.isTopic, m.forcePlace, m.traverseChildren)
+    // per mention: the article's triples, plus one probe row for its
+    // Wikidata entity (pred null) that the one-hop join below expands
+    val mentArts = mentions.joinWith(articles, mentions("url") === articles("url"))
+    val articleTriples = flatMapFused(mentArts) { case (m, a) =>
+      val ts = Emit.articleTriples(a, m.date, m.isTopic, m.forcePlace, m.traverseChildren)
+      a.wdUri.fold(ts)(w => ts :+ Triple("ohg", w, null, null, obj_is_iri = false,
+        null, null, m.date))
     }
 
     // ---- ohg module: one-hop dictionary join (the skew hotspot) ------------
@@ -251,50 +285,51 @@ object Pipeline {
     // task (Zipf skew), so the fallback routes through SaltedJoin (north
     // rule: broadcast dictionary join + salted skew-join fallback). The
     // threshold is a conf so specs can force either path on the same corpus.
-    val onehop = spark.range(p.articles)
-      .flatMap(i => if (Synth.article(p, i.toInt).wdId.isDefined) Dicts.onehopFor(i.toInt) else Nil)
-    val wdMentions = mentArts
-      .flatMap { case (m, a) => a.wdUri.map(w => (w, m.date)) }
-      .distinct()
+    val onehop = flatMapFused(spark.range(p.articles)) { i =>
+      if (Synth.article(p, i.toInt).wdId.isDefined) Dicts.onehopFor(i.toInt) else Nil
+    }
+    val isProbe = col("pred").isNull
     val bcastMaxArticles =
       spark.conf.get("graft.onehop.broadcast.maxArticles", "1000000").toInt
-    val ohgTriples: Dataset[Triple] =
-      if (p.articles <= bcastMaxArticles)
-        wdMentions
-          .joinWith(broadcast(onehop), wdMentions("_1") === onehop("subj_wd"))
-          .map { case ((_, date), r) =>
-            Triple("ohg", r.subj_wd, r.pred, r.obj, r.obj_is_iri,
-              r.obj_dtype.orNull, r.obj_lang.orNull, date)
-          }
-      else {
+    val (emitted, mentionCaches) =
+      if (p.articles <= bcastMaxArticles) {
+        // the probe rows are the join's only keys, so the join runs inside
+        // the emission stage: other rows pass with a null key and no match,
+        // a probe row becomes its entity's dictionary rows (none: dropped).
+        // An entity mentioned twice on a date (say at depth 1 and as a
+        // child) repeats its rows into the final distinct; deduping the
+        // probes first needs a second pass over the mention join, which
+        // costs more codegen classes and CPU than those few rows
+        val dict = onehop.select(onehop.columns.map(c => col(c).as("oh_" + c)): _*)
+        val fromDict = Set("pred", "obj", "obj_is_iri", "obj_dtype", "obj_lang")
+        (articleTriples
+          .join(broadcast(dict), when(isProbe, col("subj")) === col("oh_subj_wd"), "left_outer")
+          .filter(!isProbe || col("oh_pred").isNotNull)
+          .select(Encoders.product[Triple].schema.fieldNames.map(c =>
+            if (fromDict(c)) coalesce(col("oh_" + c), col(c)).as(c) else col(c)): _*)
+          .as[Triple], Nil)
+      } else {
+        // a shuffled join cannot run inside the emission stage, so the
+        // emission feeds two consumers (its triples, and the probes' hot-key
+        // scan + join): persisted, so it runs once
+        val cached = articleTriples.persist(StorageLevel.MEMORY_AND_DISK)
+        val wdMentions = cached.filter(isProbe)
+          .select(col("subj").as("subj_wd"), col("event_date")).distinct()
         val hotThreshold =
           spark.conf.get("graft.onehop.salt.hotThreshold", "10000").toLong
-        graft.plans.SaltedJoin.join(
-            wdMentions.toDF("subj_wd", "event_date"), onehop.toDF(), "subj_wd",
+        val ohg = graft.plans.SaltedJoin.join(wdMentions, onehop.toDF(), "subj_wd",
             hotThreshold = hotThreshold)
           .select(lit("ohg").as("graph_module"), col("subj_wd").as("subj"),
             col("pred"), col("obj"), col("obj_is_iri"),
             col("obj_dtype"), col("obj_lang"), col("event_date"))
           .as[Triple]
+        (cached.filter(!isProbe).unionByName(ohg), Seq(cached))
       }
 
     val out = dayTriples
-      .unionByName(articleTriples)
-      .unionByName(ohgTriples)
+      .unionByName(emitted)
       .dropDuplicates() // D1: rdflib graph set semantics
 
-    // lineage: article parse errors attributed to each mention date, one
-    // count per (date, article) — reads the mention cache (O5) by column, so
-    // no article is decoded
-    val errorsByDate = mentArts
-      .select(col("_1.date").as("event_date"), col("_2.url").as("url"),
-        col("_2.nTimeParseErrors").as("time_errs"), col("_2.nDateParseErrors").as("date_errs"))
-      .distinct()
-      .groupBy(col("event_date"))
-      .agg(sum(col("time_errs")).cast("long").as("n_time_parse_errors"),
-        sum(col("date_errs")).cast("long").as("n_date_parse_errors"))
-
-    Build(out, Seq(days, docJoined, depth1, mentArts) ++ enrichCaches,
-      errorsByDate)
+    Build(out, Seq(days, docJoined) ++ mentionCaches ++ enrichCaches)
   }
 }

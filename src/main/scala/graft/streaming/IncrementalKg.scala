@@ -45,11 +45,11 @@ object IncrementalKg {
         val dates = batch.select(col("part")).distinct()
           .collect().map(_.getString(0)).sorted
         if (dates.nonEmpty) {
-          val b = Pipeline.trackedBuild(spark, p, Some(dates.toSet),
-            Some(Materialize.enrichedSnapshot(spark, table, p)))
+          val articles = Materialize.enrichedSnapshot(spark, table, p)
+          val b = Pipeline.trackedBuild(spark, p, Some(dates.toSet), Some(articles))
           TableIO.replacePartitions(spark, table, b.triples.toDF(),
             "event_date", dates, rowsMetric = Some("n_triples"),
-            metricsFn = slice => Materialize.lineageMetrics(slice, b.articleErrorsByDate))
+            metricsFn = slice => Materialize.lineageMetrics(slice, articles))
           b.releaseCaches()
         }
       }

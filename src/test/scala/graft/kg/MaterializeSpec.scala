@@ -2,7 +2,7 @@ package graft.kg
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -196,24 +196,21 @@ class MaterializeSpec extends AnyFunSuite {
     finally s.close()
   }
 
-  /** Descriptions of the file scans in every SQL execution `f` runs,
-    * cached plans included. A sentinel action marks the end: listener
-    * events are delivered in order, so once its start arrives, every
-    * execution of `f` has been seen.
+  /** The job starts and SQL execution starts of everything `f` runs, in
+    * bus order. A sentinel action marks the end: listener events are
+    * delivered in order, so once its start arrives, every event of `f` has
+    * been seen.
     */
-  private def scansDuring(f: => Unit): Seq[String] = {
-    val scans = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val endMark = s"scans-end-${System.nanoTime}"
+  private def eventsDuring(f: => Unit): Seq[SparkListenerEvent] = {
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerEvent]
+    val endMark = s"events-end-${System.nanoTime}"
     val seenEnd = new java.util.concurrent.CountDownLatch(1)
-    def walk(i: SparkPlanInfo): Unit = {
-      if (i.nodeName.contains("Scan"))
-        scans.add(i.simpleString + " " + i.metadata.values.mkString(" "))
-      i.children.foreach(walk)
-    }
     val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (seenEnd.getCount > 0) events.add(e)
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart =>
-          if (s.description == endMark) seenEnd.countDown() else walk(s.sparkPlanInfo)
+          if (s.description == endMark) seenEnd.countDown() else events.add(s)
         case _ =>
       }
     }
@@ -225,7 +222,38 @@ class MaterializeSpec extends AnyFunSuite {
       assert(seenEnd.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "listener bus did not deliver the sentinel execution")
     } finally spark.sparkContext.removeSparkListener(listener)
-    scans.asScala.toSeq
+    events.asScala.toSeq
+  }
+
+  /** Descriptions of the file scans in every SQL execution `f` runs,
+    * cached plans included.
+    */
+  private def scansDuring(f: => Unit): Seq[String] = {
+    def walk(i: SparkPlanInfo): Seq[String] =
+      (if (i.nodeName.contains("Scan")) Seq(i.simpleString + " " + i.metadata.values.mkString(" "))
+       else Nil) ++ i.children.flatMap(walk)
+    eventsDuring(f).collect { case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo) }
+      .flatten
+  }
+
+  test("a resumed month commits with one job after the write job") {
+    val table = Files.createTempDirectory("graft_triples_jobs").toString
+    Materialize.run(spark, sfDir, table, maxMonths = 1)
+    // static plans, as the backfill's sessions run them (AQE runs each
+    // query stage as a job of its own)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // the month's jobs, by the call site of their final stage
+    val jobs = try eventsDuring(assert(Materialize.run(spark, sfDir, table) == 28)).collect {
+      case j: SparkListenerJobStart
+          if Option(j.properties).exists(_.getProperty("spark.jobGroup.id", "")
+            .startsWith("graft-materialize-")) =>
+        j.stageInfos.maxBy(_.stageId).name
+    } finally spark.conf.unset("spark.sql.adaptive.enabled")
+    val writes = jobs.zipWithIndex.filter(_._1.contains("TableIO.scala"))
+    assert(writes.size == 1, s"expected one write job among:\n${jobs.mkString("\n")}")
+    // the lineage counters, parse errors included, are one aggregation
+    val after = jobs.drop(writes.head._2 + 1)
+    assert(after.size == 1, s"jobs after the write:\n${after.mkString("\n")}")
   }
 
   test("enriched snapshot: a resumed run reuses it and scans no article pages") {

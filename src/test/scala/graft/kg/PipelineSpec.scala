@@ -1,6 +1,9 @@
 package graft.kg
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -82,6 +85,49 @@ class PipelineSpec extends AnyFunSuite {
       for (wide <- Seq("rawInfobox", "osmElements", "locLinkWkts", "childUrls", "falconEntityUris"))
         assert(!all.contains(wide), s"$wide widened the per-doc join")
     } finally b.releaseCaches()
+  }
+
+  /** Every physical node of `plan`, descending once into the plan that
+    * builds each of its in-memory caches.
+    */
+  private def allNodes(plan: SparkPlan): Seq[SparkPlan] = {
+    val seen = scala.collection.mutable.Set.empty[AnyRef]
+    def walk(p: SparkPlan): Seq[SparkPlan] = p.flatMap {
+      case s: InMemoryTableScanExec if seen.add(s.relation.cacheBuilder) =>
+        s +: walk(s.relation.cachedPlan)
+      case n => Seq(n)
+    }
+    walk(plan)
+  }
+
+  test("a snapshot-fed month build plans no MapPartitions and caches only what it keeps") {
+    val p = Synth.paramsFor("sf0.001")
+    val table = java.nio.file.Files.createTempDirectory("graft_plan_shape").toString
+    val snapshot = Materialize.enrichedSnapshot(spark, table, p)
+    // the static plan, as the committed path's sessions run it
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val b = Pipeline.trackedBuild(spark, p, Some(Materialize.datesOfMonth(p, 2022, 2).toSet),
+      Some(snapshot))
+    try {
+      val nodes = allNodes(b.triples.queryExecution.executedPlan)
+      // a typed flatMap plans as an uncompiled MapPartitions between two
+      // codegen stages; the build's per-row steps fuse map + explode instead
+      val mapPartitions = nodes.filter(_.nodeName == "MapPartitions")
+      assert(mapPartitions.isEmpty, mapPartitions.mkString("\n"))
+      // each persisted frame is one InMemoryRelation; a frame whose two
+      // consumers read one exchange is not persisted
+      val cached = nodes.collect { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
+        .distinct
+      assert(cached.size == b.caches.size, s"${cached.size} cached frames, build keeps ${b.caches.size}")
+      assert(b.caches.size == 2, "a snapshot-fed build keeps the parsed days and the per-doc join")
+      // and those consumers really share it: no exchange is planned twice
+      val exchanges = nodes.collect { case e: Exchange => e.canonicalized }
+      assert(exchanges.distinct.size == exchanges.size, "an exchange is computed twice")
+      assert(nodes.exists(_.isInstanceOf[ReusedExchangeExec]))
+    } finally {
+      b.releaseCaches()
+      spark.conf.unset("spark.sql.adaptive.enabled")
+    }
   }
 
   test("span-sequence equality: the scanned table preserves (kind, text, media_ref, order) per row") {
@@ -167,12 +213,13 @@ class PipelineSpec extends AnyFunSuite {
 
   test("reliable-checkpoint cache path emits the same triple set as localCheckpoint") {
     val sfDir = "/root/testdata/sf0.001"
-    val localPath = Pipeline.materializedTriples(spark, sfDir).collect().toSet
+    val enriched = graft.KgPipeline.enriched(spark, sfDir)
+    val localPath = Pipeline.materializedTriples(spark, sfDir, enriched).collect().toSet
     val ckDir = java.nio.file.Files.createTempDirectory("graft_reliable_ck").toString
     spark.conf.set("graft.cache.reliable", "true")
     spark.conf.set("graft.cache.checkpointDir", ckDir)
     try {
-      val reliable = Pipeline.materializedTriples(spark, sfDir)
+      val reliable = Pipeline.materializedTriples(spark, sfDir, enriched)
       // a reliable checkpoint actually landed on disk (survives executor
       // loss); getOrCreate shares one SparkContext across suites, so only
       // assert a checkpoint dir exists and holds data
