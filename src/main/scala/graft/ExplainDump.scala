@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-audit dump: `explain("formatted")` for the FULL query surface, one
@@ -42,14 +41,8 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 1) args(1) else "BENCH/plans"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's confs (AQE off), so the archive shows the plans the lap runs
+    val spark = Lab.session()
     Files.createDirectories(Paths.get(outDir))
     val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     val names =

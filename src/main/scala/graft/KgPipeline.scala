@@ -66,18 +66,16 @@ object KgPipeline {
     */
   def release(): Unit = {
     cache.foreachValue(graft.plans.Caches.free(_)); cache.clear()
-    edgeCache.foreachValue(graft.plans.Caches.free(_)); edgeCache.clear()
-    // exact-path cleanup of every pred-layout dir this JVM wrote (covers
-    // custom graft.edges.predDir values the substring match in Caches.free
-    // would miss; double-deletion of the default dirs is a no-op)
-    predDirsWritten.forEach { p =>
+    // the edge cache holds no blocks, only its parquet directories
+    edgeCache.clear()
+    edgeDirsWritten.forEach { p =>
       try {
         val path = new org.apache.hadoop.fs.Path(p)
         path.getFileSystem(new org.apache.hadoop.conf.Configuration())
           .delete(path, true)
       } catch { case scala.util.control.NonFatal(_) => () }
     }
-    predDirsWritten.clear()
+    edgeDirsWritten.clear()
     enrichedCache.foreachValue(graft.plans.Caches.free(_)); enrichedCache.clear()
     metricsCache.foreachValue(graft.plans.Caches.free(_)); metricsCache.clear()
     corpusSpansCache.foreachValue(graft.plans.Caches.free(_)); corpusSpansCache.clear()
@@ -116,7 +114,7 @@ object KgPipeline {
     * predicate must extend this list; the KgQueriesSpec sequential-oracle
     * fixtures fail immediately if a needed predicate is missing.
     */
-  private val EdgePreds: Seq[String] = Seq(
+  private[graft] val EdgePreds: Seq[String] = Seq(
     Ns.COY + "hasMentionDate", Ns.COY + "isOccuringDuring",
     Ns.COY + "isIdentifiedBy", Ns.COY + "hasOsmElement",
     Ns.COY + "hasWikidataEventType",
@@ -136,55 +134,44 @@ object KgPipeline {
 
   /** Date-deduped edges over the kg-query predicate set, cached per sf.
     *
-    * Two layouts, selected by conf `graft.edges.layout`:
-    *
-    *  - `leaf`: one localCheckpoint/checkpoint leaf
-    *    ([[graft.plans.Caches.leaf]]). Chain queries embed up to 8 copies of
-    *    this frame, and a leaf plan keeps their eager per-transformation
-    *    analysis O(query), not O(copies × lineage) — but every
-    *    per-predicate filter re-scans the WHOLE edge frame (kg11's plan
-    *    scans it 6×).
-    *  - `pred` (default): the projection is written ONCE as parquet partitioned by
-    *    `pred` and read back. Consumers are unchanged — their existing
-    *    `filter(col("pred") === …)` becomes partition PRUNING at the scan,
-    *    so each of kg11's 6 predicate legs reads only its own partition
-    *    instead of the full edge set. This is the layout a 100 TB triple
-    *    store wants (predicate-partitioned storage prunes I/O at the
-    *    source and survives executor loss); measured against `leaf` in
-    *    BENCH/BASELINE.md §edge-layout.
+    * The projection is written ONCE as parquet partitioned by `pred` and
+    * read back, so every consumer's `filter(col("pred") === …)` is partition
+    * PRUNING at the scan: each of kg11's 6 predicate legs reads only its own
+    * partition instead of the full edge set. This is the layout a 100 TB
+    * triple store wants (predicate-partitioned storage prunes I/O at the
+    * source and survives executor loss); it measured 3.5× faster on chain
+    * queries than one localCheckpoint leaf of the whole projection
+    * (BENCH/BASELINE.md §3a).
     */
-  // every pred-layout directory this JVM wrote, deleted BY EXACT PATH on
-  // release() (r6 ADVICE: the Caches.free substring match silently leaked
-  // dirs under a custom graft.edges.predDir)
-  private val predDirsWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   def edges(spark: SparkSession, sfDir: String): DataFrame =
     edgeCache.get(spark, sfDir) {
-      val base = triples(spark, sfDir)
+      // dir is keyed by (sf, session, PROCESS): two live sessions on the
+      // same sf must not overwrite each other's files mid-read, and
+      // identity hashes are reproducible across JVMs (fixed HotSpot PRNG
+      // seed), so two CONCURRENT JVMs on the same sf (the multi-JVM bench
+      // workflow) could resolve to the same dir without the pid component.
+      // release() deletes it.
+      val dir = EdgeCacheRoot + "/" + java.lang.Integer.toHexString(sfDir.hashCode) +
+        "-" + java.lang.Integer.toHexString(System.identityHashCode(spark)) +
+        "-p" + ProcessHandle.current().pid()
+      triples(spark, sfDir)
         .filter(col("pred").isin(EdgePreds: _*))
         .select(col("subj"), col("pred"), col("obj")).distinct()
-      if (spark.conf.get("graft.edges.layout", "pred") == "pred") {
-        // dir is keyed by (sf, session, PROCESS): two live sessions on the
-        // same sf must not overwrite each other's files mid-read, and —
-        // r6 ADVICE (medium) — identity hashes are reproducible across JVMs
-        // (fixed HotSpot PRNG seed), so two CONCURRENT JVMs on the same sf
-        // (the multi-JVM bench workflow) could resolve to the same dir and
-        // overwrite each other's parquet files mid-read without the pid
-        // component. Caches.free / release() delete the directory.
-        val dir = spark.conf.get("graft.edges.predDir",
-          sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-edge-cache") +
-          "/" + java.lang.Integer.toHexString(sfDir.hashCode) +
-          "-" + java.lang.Integer.toHexString(System.identityHashCode(spark)) +
-          "-p" + ProcessHandle.current().pid()
-        base.write.mode("overwrite").partitionBy("pred").parquet(dir)
-        predDirsWritten.add(dir)
-        // partition values round-trip URL-escaped directory names; the
-        // select restores the (subj, pred, obj) column order the leaf
-        // layout exposes. EdgeLayoutSpec asserts frame equality.
-        spark.read.parquet(dir).select(col("subj"), col("pred"), col("obj"))
-      } else graft.plans.Caches.leaf(base)
+        .write.mode("overwrite").partitionBy("pred").parquet(dir)
+      edgeDirsWritten.add(dir)
+      // partition values round-trip URL-escaped directory names
+      // (EdgeLayoutSpec compares them to the triples); the select restores
+      // the (subj, pred, obj) column order
+      spark.read.parquet(dir).select(col("subj"), col("pred"), col("obj"))
     }
+
+  private val EdgeCacheRoot =
+    sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-edge-cache"
+
+  // every edge-cache directory this JVM wrote, deleted by exact path on
+  // release()
+  private val edgeDirsWritten =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Flagship: full pipeline at tiny scale — returns the triple DataFrame. */
   def entry(spark: SparkSession, sfDir: String): DataFrame =
@@ -627,7 +614,7 @@ object KgPipeline {
     */
   def cooccurrence(s: SparkSession, d: String): DataFrame =
     coocCache.get(s, d) {
-      // Shape kept AS-IS after measurement (r6, BenchExtra `cooc` probe): a
+      // Shape kept AS-IS after measurement (r6 stage probe): a
       // window-based k-guard (count OVER (PARTITION BY event), no barrier,
       // self-join sides sharing one ReusedExchange) measured 5.3 s vs 1.5 s
       // for this checkpoint + semi-join shape — the window executes once
@@ -754,7 +741,7 @@ object KgPipeline {
     // SMJ (two sorted sides) and subsumes the engine-side pre-distinct
     // (max-per-side handles duplicates). groupBy treats NULL keys as equal,
     // exactly the <=> semantics the join used; counts are identical
-    // (BenchExtra kg16: the oracle re-derivation is 0.5 s — the diff was
+    // (`graft.Lab kg16`: the oracle re-derivation is 0.5 s — the diff was
     // the other ~4 s of this query).
     val parity = eng.withColumn("src", lit(1))
       .unionByName(orc.withColumn("src", lit(2)))

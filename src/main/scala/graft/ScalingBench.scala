@@ -35,7 +35,7 @@ object ScalingBench {
       case Array("single", c) => single(c.toInt)
       case Array("shard", y, ys, c) => shard(y.toInt, ys.toInt, c.toInt, None, 0)
       case Array("shard", y, ys, c, bar, n) => shard(y.toInt, ys.toInt, c.toInt, Some(bar), n.toInt)
-      case _ => single(envInt("SPARK_GRAFT_CPUS", 8))
+      case _ => single(Lab.cores)
     }
   }
 
@@ -57,7 +57,7 @@ object ScalingBench {
       articles = envInt("SPARK_GRAFT_BENCH_ARTICLES", 2000))
     // corpus-table writes + JIT/codegen warmup all before any timing
     sizes.foreach(y => graft.kg.CorpusStore.ensure(spark, paramsFor(y)))
-    Pipeline.triplesFor(spark, paramsFor(sizes.min)).count()
+    build(spark, paramsFor(sizes.min))
 
     // measure every size in this one warm JVM, min-of-k (host burst-budget
     // noise swamps single measurements); the barrier aligns all parties per
@@ -66,7 +66,6 @@ object ScalingBench {
     val points = sizes.map { y =>
       val p = paramsFor(y)
       val runs = (1 to repeats).map { r =>
-        spark.catalog.clearCache()
         System.gc()
         // idle so the host's burstable-CPU budget recovers before measuring —
         // a 4-JVM fleet drains it ~4x faster than one pinned JVM
@@ -79,7 +78,7 @@ object ScalingBench {
             f.getFileName.toString.endsWith(s"-$y-$r")) < parties) Thread.sleep(200)
         }
         val t0 = System.nanoTime()
-        val n = Pipeline.triplesFor(spark, p).count()
+        val n = build(spark, p)
         (n, (System.nanoTime() - t0) / 1e9)
       }
       (Synth.allDaysOf(p).size, runs.map(_._2).min, runs.head._1)
@@ -99,19 +98,17 @@ object ScalingBench {
     }
   }
 
-  private def session(cores: Int): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // static planning beats AQE for this job shape at bench scale: known
-      // sizes, ~20 small exchanges — AQE's per-stage barriers add latency
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (256L << 20).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+  // the shared dev session plus this bench's one conf: a 256 MB broadcast
+  // threshold
+  private def session(cores: Int): SparkSession =
+    Lab.session(cores, Map("spark.sql.autoBroadcastJoinThreshold" -> (256L << 20).toString))
+
+  /** One tracked triple build: its count, with the stage caches it held
+    * released, so the next build starts with no blocks of this one.
+    */
+  private def build(spark: SparkSession, p: Synth.Params): Long = {
+    val b = Pipeline.trackedBuild(spark, p)
+    try b.triples.count() finally b.releaseCaches()
   }
 
   /** Multi-size sweep at one parallelism level: the same pipeline at ≥3
@@ -131,17 +128,16 @@ object ScalingBench {
     // JIT/codegen warmup (same plan shapes) + corpus-table writes happen
     // before any timing
     sizes.foreach(sp => graft.kg.CorpusStore.ensure(spark, sp))
-    Pipeline.triplesFor(spark, base.copy(years = 1,
-      articles = math.min(base.articles, 4000), density = 1)).count()
+    build(spark, base.copy(years = 1,
+      articles = math.min(base.articles, 4000), density = 1))
 
     def once(sp: Synth.Params): (Long, Double) = {
-      spark.catalog.clearCache()
       System.gc()
       // settle gap before measuring (taskset pinning keeps host load at
       // cores/32, so the burst budget barely drains — a short gap suffices)
       Thread.sleep(envInt("SPARK_GRAFT_BENCH_SLEEP_MS", 5000).toLong)
       val t0 = System.nanoTime()
-      val n = Pipeline.triplesFor(spark, sp).count()
+      val n = build(spark, sp)
       (n, (System.nanoTime() - t0) / 1e9)
     }
     val points = sizes.map { sp =>
@@ -163,19 +159,15 @@ object ScalingBench {
     val docs = Synth.allDaysOf(p).size.toLong + p.articles
 
     def once(): (Long, Double) = {
-      // drop the previous run's persisted blocks — cached GBs from run k
-      // thrash run k+1's storage memory otherwise
-      spark.catalog.clearCache()
       System.gc()
       // idle gap so the host's burstable-CPU budget recovers before measuring
       Thread.sleep(30000)
       val t0 = System.nanoTime()
-      val n = Pipeline.triplesFor(spark, p).count()
+      val n = build(spark, p)
       (n, (System.nanoTime() - t0) / 1e9)
     }
     // JIT/codegen warmup at reduced scale (same plan shapes)
-    Pipeline.triplesFor(spark, p.copy(years = 1, articles = math.min(p.articles, 4000),
-      density = 1)).count()
+    build(spark, p.copy(years = 1, articles = math.min(p.articles, 4000), density = 1))
     val runs = (1 to 3).map(_ => once())
     require(runs.map(_._1).distinct.size == 1, s"nondeterministic triples: $runs")
     val secs = runs.map(_._2).min

@@ -71,15 +71,6 @@ object Pipeline {
       }
   }
 
-  /** Untracked convenience wrapper (tests): DISCARDS the stage-cache
-    * handles, so the parse-stage persist can never be released and — worse —
-    * Spark's CacheManager may silently serve the leaked cache to any later
-    * plan with the same subtree. Long-lived callers must use
-    * [[enrichedArticlesTracked]] and release after materializing.
-    */
-  def enrichedArticles(spark: SparkSession, p: Synth.Params): Dataset[EnrichedArticle] =
-    enrichedArticlesTracked(spark, p)._1
-
   /** Enriched articles plus the parse-stage cache the join graph holds
     * (released by the caller once the result is materialized).
     */
@@ -130,13 +121,12 @@ object Pipeline {
     (ev ++ top).distinct
   }
 
+  /** The triple build for an sf dir, for tests: it drops the stage-cache
+    * handles, so long-lived callers use [[trackedBuild]] and release them.
+    */
   def triples(spark: SparkSession, sfDir: String,
       onlyDates: Option[Set[String]] = None): Dataset[Triple] =
-    triplesFor(spark, Synth.paramsFor(sfDir), onlyDates)
-
-  def triplesFor(spark: SparkSession, p: Synth.Params,
-      onlyDates: Option[Set[String]] = None): Dataset[Triple] =
-    triplesTracked(spark, p, onlyDates)._1
+    trackedBuild(spark, Synth.paramsFor(sfDir), onlyDates).triples
 
   /** Build + persist + materialize the triple table, then release the
     * intermediate stage caches (parsed days / doc join / articles) the build
@@ -172,12 +162,6 @@ object Pipeline {
     */
   case class Build(triples: Dataset[Triple], caches: Seq[Dataset[_]]) {
     def releaseCaches(): Unit = caches.foreach(_.unpersist(blocking = false))
-  }
-
-  def triplesTracked(spark: SparkSession, p: Synth.Params,
-      onlyDates: Option[Set[String]] = None): (Dataset[Triple], Seq[Dataset[_]]) = {
-    val b = trackedBuild(spark, p, onlyDates)
-    (b.triples, b.caches)
   }
 
   /** `ds.flatMap(f)` planned as a typed map to a Seq plus `explode`: the

@@ -4,11 +4,12 @@ import org.apache.spark.sql.Dataset
 
 /** Shared-cache materialization policy.
   *
-  * Long-lived shared caches (the triple table, the edge projection, the
-  * enriched-article frame) must be LEAF plans: consumers embed up to ~8
-  * copies, and an un-truncated lineage costs O(copies × plan size) of eager
-  * re-analysis per query (see the spark-bench-protocol notes / BENCH/
-  * BASELINE.md). Two ways to get a leaf:
+  * Long-lived shared caches (the triple table, the enriched-article frame)
+  * must be LEAF plans: consumers embed up to ~8 copies, and an un-truncated
+  * lineage costs O(copies × plan size) of eager re-analysis per query (see
+  * the spark-bench-protocol notes / BENCH/BASELINE.md). (The edge
+  * projection is a leaf by construction: a parquet scan, KgPipeline.edges.)
+  * Two ways to get a leaf:
   *
   *  - `localCheckpoint` (default): blocks live on executors, zero extra I/O.
   *    Correct in one local JVM; on a real cluster a lost executor makes the
@@ -55,20 +56,6 @@ object Caches {
             val path = new org.apache.hadoop.fs.Path(p)
             path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
           } catch { case scala.util.control.NonFatal(_) => () }
-        }
-      // the pred-partitioned edge cache (KgPipeline.edges layout=pred) is a
-      // session-private parquet directory this module wrote — delete it,
-      // nothing else ever reads it. Foreign file relations are untouched.
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths
-              .filter(_.toString.contains("graft-edge-cache"))
-              .foreach { path =>
-                try path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
-                catch { case scala.util.control.NonFatal(_) => () }
-              }
-          case _ => ()
         }
       case _ => ()
     }

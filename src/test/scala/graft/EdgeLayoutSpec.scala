@@ -3,12 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The edge cache has two physical layouts (`graft.edges.layout`): the
-  * localCheckpoint leaf and the pred-partitioned parquet store. Queries must
-  * be layout-blind — same rows, same chain-query results — and the parquet
-  * layout must actually PRUNE: a single-predicate filter's scan reads only
-  * that predicate's partition. The J1 both-paths pattern (Enrich broadcast vs
-  * forced-shuffle).
+/** The edge cache is a pred-partitioned parquet store. Its rows must be
+  * exactly the distinct (subj, pred, obj) edge projection of the triples,
+  * the store must actually PRUNE (a single-predicate filter's scan reads
+  * only that predicate's partition), and release() must delete it.
   */
 class EdgeLayoutSpec extends AnyFunSuite {
 
@@ -21,62 +19,49 @@ class EdgeLayoutSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def session(layout: String): SparkSession = {
-    val s = spark.newSession() // own SessionCache key → own edge build
-    s.conf.set("graft.edges.layout", layout)
-    s
-  }
+  // own SessionCache key → own edge build
+  private def session(): SparkSession = spark.newSession()
 
-  test("pred-partitioned layout returns the exact leaf-layout edge set") {
-    val leaf = KgPipeline.edges(session("leaf"), sfDir)
-    val pred = KgPipeline.edges(session("pred"), sfDir)
-    assert(leaf.columns.toSeq == pred.columns.toSeq)
-    val l = leaf.collect().map(_.toSeq).sortBy(_.mkString("\u0000"))
-    val p = pred.collect().map(_.toSeq).sortBy(_.mkString("\u0000"))
-    assert(l.length == p.length, s"row counts differ: ${l.length} vs ${p.length}")
+  test("pred-partitioned layout returns the distinct edge projection of the triples") {
+    import org.apache.spark.sql.functions.col
+    val s = session()
+    val edges = KgPipeline.edges(s, sfDir)
+    val expected = KgPipeline.triples(s, sfDir)
+      .filter(col("pred").isin(KgPipeline.EdgePreds: _*))
+      .select(col("subj"), col("pred"), col("obj")).distinct()
+    assert(edges.columns.toSeq == Seq("subj", "pred", "obj"))
+    val e = edges.collect().map(_.toSeq).sortBy(_.mkString("\u0000"))
+    val x = expected.collect().map(_.toSeq).sortBy(_.mkString("\u0000"))
+    assert(e.length == x.length, s"row counts differ: ${e.length} vs ${x.length}")
     // URI predicates round-trip through URL-escaped partition directory
     // names — any escaping defect shows up here as a value diff
-    assert(l.sameElements(p))
-  }
-
-  test("chain queries are layout-blind (kg05/kg06/kg11 identical rows)") {
-    val sLeaf = session("leaf")
-    val sPred = session("pred")
-    for (q <- Seq("kg05_event_map_wkts", "kg06_topic_graph", "kg11_company_entities")) {
-      val fn = SparkEntry.queries(q)
-      val a = fn(sLeaf, sfDir).collect().map(_.toSeq)
-      val b = fn(sPred, sfDir).collect().map(_.toSeq)
-      assert(a.length == b.length, s"$q row counts differ")
-      assert(a.sameElements(b), s"$q rows differ between layouts")
-    }
+    assert(e.sameElements(x))
   }
 
   test("release() deletes the pred layout's session-private parquet dir") {
-    val s = session("pred")
-    val e = KgPipeline.edges(s, sfDir)
+    val e = KgPipeline.edges(session(), sfDir)
     val dirs = e.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         r.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
           .location.rootPaths.map(_.toString)
     }.flatten.filter(_.contains("graft-edge-cache"))
-    assert(dirs.nonEmpty, "pred layout must read from the edge-cache dir")
+    assert(dirs.nonEmpty, "the edge cache must read from its parquet dir")
     val local = new java.io.File(new java.net.URI(dirs.head).getPath)
     assert(local.exists())
     KgPipeline.release()
     assert(!local.exists(),
-      s"release() must delete the pred-layout cache dir $local — " +
+      s"release() must delete the edge cache dir $local — " +
         "repeated build cycles would otherwise grow the store")
   }
 
   test("single-predicate filter prunes partitions in the pred layout") {
     import org.apache.spark.sql.functions.col
-    val s = session("pred")
-    val e = KgPipeline.edges(s, sfDir)
+    val e = KgPipeline.edges(session(), sfDir)
     val one = e.filter(col("pred") === graft.kg.Ns.owlSameAs)
     val scans = one.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
-    assert(scans.nonEmpty, "pred layout must scan parquet files")
+    assert(scans.nonEmpty, "the edge cache must scan parquet files")
     val scan = scans.head
     // static partition pruning: exactly one of the ~16 pred partitions
     assert(scan.relation.partitionSchema.fieldNames.contains("pred"),

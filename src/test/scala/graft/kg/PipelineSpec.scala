@@ -149,7 +149,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("dictionary enrichment runs as Catalyst broadcast hash joins") {
     val p = Synth.paramsFor("/root/testdata/sf0.001")
-    val plan = Pipeline.enrichedArticles(spark, p)
+    val plan = Pipeline.enrichedArticlesTracked(spark, p)._1
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"expected BroadcastHashJoin in enrich plan:\n${plan.take(4000)}")
@@ -166,7 +166,7 @@ class PipelineSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       // the gate really removed the hints: no broadcast join over the dicts
-      val plan = Pipeline.enrichedArticles(spark, p)
+      val plan = Pipeline.enrichedArticlesTracked(spark, p)._1
         .queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastHashJoin"),
         s"dict broadcast hint not gated off:\n${plan.take(4000)}")
