@@ -9,7 +9,7 @@ import java.nio.file.{Files, Paths}
   * shows predicate pushdown, `BroadcastHashJoin`/`SortMergeJoin` nodes show
   * which side broadcasts, and `Exchange` nodes count the shuffles.
   *
-  * Iterative fixpoint queries (g01/g02/g03/g05, kg04, kg08) return their
+  * Iterative fixpoint queries (g01/g02/g03/g05, kg04, kg08, kg17) return their
   * final-round LEAF (a LogicalRDD), so the printed plan shows the readout
   * over that leaf, none of the per-round work — those dumps carry an explicit
   * header note and their plan story is the loop code plus the round-latency
@@ -30,7 +30,18 @@ object ExplainDump {
     */
   private val FixpointLeaves = Set(
     "g01_cc_chains", "g02_tree_depth", "g03_pagerank", "g05_sssp",
-    "kg04_closure_events_per_month", "kg08_canonical_clusters")
+    "kg04_closure_events_per_month", "kg08_canonical_clusters",
+    "kg17_entity_pagerank")
+
+  /** Plan text that differs per process: the edge cache's directory
+    * (`KgPipeline.edges`) and a lambda's class number and identity hash.
+    * The dump shows fixed tokens instead, so an unchanged plan dumps the
+    * same text run over run.
+    */
+  private val EdgeCacheDir = """file:[^\[\]\s,]*/graft-edge-cache/[^\[\]\s,]+""".r
+  private val LambdaId = """\$Lambda\$\d+/0x\p{XDigit}+@\p{XDigit}+""".r
+  private def maskProcessIds(plan: String): String =
+    LambdaId.replaceAllIn(EdgeCacheDir.replaceAllIn(plan, "<edge-cache-dir>"), "\\$Lambda")
 
   private val FixpointNote =
     "NOTE: this query is an iterative fixpoint loop; the plan below is the\n" +
@@ -53,7 +64,7 @@ object ExplainDump {
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"ExplainDump names a query that no longer exists: $name"))
       try {
-        val plan = fn(spark, sfDir).queryExecution.explainString(mode)
+        val plan = maskProcessIds(fn(spark, sfDir).queryExecution.explainString(mode))
         val note = if (FixpointLeaves(name)) FixpointNote else ""
         Files.writeString(Paths.get(s"$outDir/$name.txt"),
           s"== $name @ $sfDir ==\n\n$note$plan")

@@ -68,14 +68,7 @@ object KgPipeline {
     cache.foreachValue(graft.plans.Caches.free(_)); cache.clear()
     // the edge cache holds no blocks, only its parquet directories
     edgeCache.clear()
-    edgeDirsWritten.forEach { p =>
-      try {
-        val path = new org.apache.hadoop.fs.Path(p)
-        path.getFileSystem(new org.apache.hadoop.conf.Configuration())
-          .delete(path, true)
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
-    edgeDirsWritten.clear()
+    deleteEdgeDirs()
     enrichedCache.foreachValue(graft.plans.Caches.free(_)); enrichedCache.clear()
     metricsCache.foreachValue(graft.plans.Caches.free(_)); metricsCache.clear()
     corpusSpansCache.foreachValue(graft.plans.Caches.free(_)); corpusSpansCache.clear()
@@ -169,9 +162,23 @@ object KgPipeline {
     sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-edge-cache"
 
   // every edge-cache directory this JVM wrote, deleted by exact path on
-  // release()
+  // release() and, for a JVM that ends without a last release() (a test
+  // run), at exit: the hook runs before Hadoop closes its file systems
   private val edgeDirsWritten =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+    () => deleteEdgeDirs(), org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 1)
+
+  private def deleteEdgeDirs(): Unit = {
+    edgeDirsWritten.forEach { p =>
+      try {
+        val path = new org.apache.hadoop.fs.Path(p)
+        path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+          .delete(path, true)
+      } catch { case scala.util.control.NonFatal(_) => () }
+    }
+    edgeDirsWritten.clear()
+  }
 
   /** Flagship: full pipeline at tiny scale — returns the triple DataFrame. */
   def entry(spark: SparkSession, sfDir: String): DataFrame =
@@ -644,7 +651,7 @@ object KgPipeline {
     * per-node WEIGHTED mass split: a node's rank flows to each neighbor in
     * proportion (pr * w) DIV wtot, so heavily co-mentioned pairs pull rank.
     * Every round is one join + one aggregate over a localCheckpoint leaf
-    * (plans stay O(round)); 8 rounds, AQE off for the loop window. The
+    * (plans stay O(round)); 8 rounds on plans.FixedPoint. The
     * DuckDB oracle recomputes the identical iteration as an unrolled
     * MATERIALIZED CTE chain over the dumped co-occurrence edges
     * ({AUX}/kg_cooc), so the semantics are re-derived from artifacts.
@@ -675,20 +682,13 @@ object KgPipeline {
     val wtot = edges.groupBy(col("src")).agg(sum(col("w")).as("wtot"))
     val edgesW = edges.join(wtot, Seq("src")).localCheckpoint(true)
     val teleport = 15L * (Kg17Scale / n) / 100
-    graft.plans.Aqe.without(s) {
-      var pr = nodes.selectExpr("node", s"CAST(${Kg17Scale / n} AS BIGINT) AS pr")
-      for (i <- 1 to Kg17Iters) {
-        pr = edgesW.join(pr.withColumnRenamed("node", "src"), Seq("src"))
-          .selectExpr("dst", "(pr * w) DIV wtot AS c")
-          .groupBy(col("dst")).agg(sum(col("c")).as("sum_in"))
-          .selectExpr("dst AS node", s"$teleport + (85 * sum_in) DIV 100 AS pr")
-        // leaf every SECOND round (g03's r6 cadence): same arithmetic, half
-        // the materialization barriers, plans bounded at two rounds deep
-        if (i % 2 == 0 || i == Kg17Iters)
-          pr = pr.localCheckpoint(eager = true)
-      }
-      pr.selectExpr("node AS wd", "pr AS pr_e12").orderBy(col("wd"))
-    }
+    graft.plans.FixedPoint.iterate(s, "salience", Kg17Iters)(
+      nodes.selectExpr("node", s"CAST(${Kg17Scale / n} AS BIGINT) AS pr")) { pr =>
+      edgesW.join(pr.withColumnRenamed("node", "src"), Seq("src"))
+        .selectExpr("dst", "(pr * w) DIV wtot AS c")
+        .groupBy(col("dst")).agg(sum(col("c")).as("sum_in"))
+        .selectExpr("dst AS node", s"$teleport + (85 * sum_in) DIV 100 AS pr")
+    }.selectExpr("node AS wd", "pr AS pr_e12").orderBy(col("wd"))
   }
 
   /** kg18: MONTH-OVER-MONTH SNAPSHOT DELTA per graph module — the CDC view

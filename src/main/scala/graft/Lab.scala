@@ -48,15 +48,14 @@ object Lab {
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The dev session, on graft.Bench's confs: `cores` task slots and
-    * shuffle partitions, AQE off, the loop width Bench pins (without it,
-    * loop timings read 3–4× high), UTC, no UI. `extra` confs go on top.
+    * shuffle partitions (fixed-point loops run at that width too), AQE off,
+    * UTC, no UI. `extra` confs go on top.
     */
   def session(cores: Int = Lab.cores, extra: Map[String, String] = Map.empty): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "false")
-      .config("graft.loop.shufflePartitions", math.min(8, cores).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(extra)
@@ -300,7 +299,7 @@ object Lab {
   }
 
   /** One KG growth point: cache builds, chain-query walls (two warm runs),
-    * and the reach/CC round counts.
+    * and the reach/CC/PageRank round counts.
     */
   private def growthKg(run: Run, dir: String): Unit = {
     val s = run.spark
@@ -316,7 +315,8 @@ object Lab {
     if (e("kg08_full")(KgPipeline.kg08CanonicalClusters(s, dir).count()))
       run.rounds(s"$dir:kg08_cc_rounds", "cc.rounds")
     e("kg15_cooc_build")(KgPipeline.cooccurrence(s, dir).count())
-    e("kg17_full")(KgPipeline.kg17EntityPagerank(s, dir).count())
+    if (e("kg17_full")(KgPipeline.kg17EntityPagerank(s, dir).count()))
+      run.rounds(s"$dir:kg17_pagerank_rounds", "salience.rounds")
     e("cache_corpus_build")(KgPipeline.corpusSpans(s, dir).count())
     e("m07_full")(multimodal.Multimodal.m07SequencePacking(s, dir).count())
     KgPipeline.release()

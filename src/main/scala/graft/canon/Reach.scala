@@ -2,6 +2,7 @@ package graft.canon
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.FixedPoint
 
 /** Downward reachability closure over a (child, parent) edge list: every
   * node reachable from `seed` by repeatedly following parent→child edges.
@@ -13,10 +14,10 @@ import org.apache.spark.sql.functions._
   * 8-round cap (justified by "day-page nesting ≤ 4") silently dropped the
   * depth-9 tail of the sf0.1 topic graph — 3 nodes, one event, an
   * off-by-one in a monthly rollup that only a cross-SF oracle run caught.
-  * Frontier rounds are O(closure diameter); each round's frame is
-  * localCheckpoint'ed so the plan stays O(1) per round instead of growing
-  * with the iteration count (plans.Aqe turns AQE off for the window — the
-  * per-round frames are tiny and the stage barriers would dominate).
+  * Frontier rounds are O(closure diameter), run by plans.FixedPoint (one
+  * checkpoint job per round, AQE off). Cycles cannot trip the guard: the
+  * left_anti keeps every frontier strictly new, so a cyclic graph still
+  * converges in <= |nodes| rounds — only a graph deeper than maxRounds can.
   */
 object Reach {
 
@@ -24,44 +25,24 @@ object Reach {
     * @param seed one column named node
     * @return one column `node`: the seed plus everything reachable below it
     */
-  def closure(childParent: DataFrame, seed: DataFrame, maxRounds: Int = 64): DataFrame = {
-    val s = childParent.sparkSession
-    graft.plans.Aqe.without(s) {
-      var reach = seed.select(col("node")).localCheckpoint(true)
-      var frontier = reach
-      var done = false
-      var productive = 0
-      while (!done) {
-        val next = childParent
-          .join(frontier.withColumnRenamed("node", "parent"), Seq("parent"))
-          .select(col("child").as("node")).distinct()
-          .join(reach, Seq("node"), "left_anti")
-          .localCheckpoint(true)
-        if (next.isEmpty) done = true
-        else {
-          productive += 1
-          // guard only PRODUCTIVE rounds, so a closure of depth exactly
-          // maxRounds still gets its confirming empty round and succeeds.
-          // Cycles cannot trip this: the left_anti keeps every frontier
-          // strictly new, so a cyclic graph still converges in <= |nodes|
-          // rounds — only a graph deeper than maxRounds can.
-          require(productive <= maxRounds,
-            s"Reach.closure exceeded $maxRounds productive rounds — the edge " +
-              "graph is deeper than any sane topic nesting; refusing to " +
-              "return a silently truncated closure")
-          // accumulate as a UNION OF LEAVES (every `next` is already a
-          // checkpointed leaf, so nothing recomputes); checkpoint the union
-          // only every 8th round to bound plan width — r6: the former
-          // per-round union checkpoint was one full job per round, a third
-          // of the loop's job count, purely to re-materialize rows that
-          // were all in blocks already
-          reach = reach.union(next)
-          if (productive % 8 == 0) reach = reach.localCheckpoint(true)
-          frontier = next
-        }
-      }
-      graft.plans.Meters.set("reach.rounds", productive.toLong)
-      reach
-    }
-  }
+  def closure(childParent: DataFrame, seed: DataFrame, maxRounds: Int = 64): DataFrame =
+    FixedPoint.converge(childParent.sparkSession, "reach", maxRounds) {
+      val s = seed.select(col("node")).localCheckpoint(true)
+      (s, s)
+    } { case ((reach, frontier), round) =>
+      val next = childParent
+        .join(frontier.withColumnRenamed("node", "parent"), Seq("parent"))
+        .select(col("child").as("node")).distinct()
+        .join(reach, Seq("node"), "left_anti")
+      // accumulate as a UNION OF LEAVES (every `next` is already a
+      // checkpointed leaf, so nothing recomputes); checkpoint the union
+      // only every 8th round to bound plan width — r6: the former
+      // per-round union checkpoint was one full job per round, a third
+      // of the loop's job count, purely to re-materialize rows that
+      // were all in blocks already
+      FixedPoint.Round(next, leaf => {
+        val r = reach.union(leaf)
+        (if (round % 8 == 0) r.localCheckpoint(true) else r, leaf)
+      })
+    }._1
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.canon.ConnectedComponents
+import graft.plans.FixedPoint
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -46,31 +47,23 @@ object Graph {
     val nodes = Tables.documents(s, d).select(col("doc_id")).localCheckpoint(true)
     val edges = nodes.filter(col("doc_id") > 0)
       .selectExpr("doc_id AS child", "doc_id DIV 2 AS parent")
-    var frontier = nodes.filter(col("doc_id") === 0)
+    val root = nodes.filter(col("doc_id") === 0)
       .select(col("doc_id"), lit(0).as("depth"))
     // same root assumption as g05's source seed: the oracle's recursive CTE
     // anchors at node 0 unconditionally, so a corpus without doc_id 0 must
     // fail loudly here, not return an empty frame against a non-empty oracle
-    require(frontier.count() == 1,
+    require(root.count() == 1,
       "g02 tree depth needs doc_id 0 as the root (the oracle anchors its " +
         "recursion there) — the documents table has no such row")
-    var acc = frontier
-    var productive = 0
-    var done = false
-    while (!done) {
-      val next = edges.join(frontier.withColumnRenamed("doc_id", "parent"), Seq("parent"))
-        .select(col("child").as("doc_id"), (col("depth") + 1).as("depth"))
-        .localCheckpoint(eager = true)
-      if (next.isEmpty) done = true
-      else {
-        productive += 1
-        // same policy as canon.Reach: the cap is a corruption guard counting
-        // only PRODUCTIVE rounds (tree depth is log2(n); 64 covers any
-        // conceivable corpus), never a silent truncation of the result
-        require(productive <= 64, "g02 BFS exceeded 64 productive rounds — " +
-          "doc_id tree deeper than 2^64 is impossible, so the input is corrupt")
-        acc = acc.union(next); frontier = next
-      }
+    // same policy as canon.Reach: the cap is a corruption guard counting
+    // only PRODUCTIVE rounds (tree depth is log2(n); 64 covers any
+    // conceivable corpus), never a silent truncation of the result
+    val (acc, _) = FixedPoint.converge(s, "bfs", 64)((root, root)) {
+      case ((acc, frontier), _) =>
+        FixedPoint.Round(
+          edges.join(frontier.withColumnRenamed("doc_id", "parent"), Seq("parent"))
+            .select(col("child").as("doc_id"), (col("depth") + 1).as("depth")),
+          next => (acc.union(next), next))
     }
     acc.select(col("doc_id"), col("depth").cast(IntegerType).as("depth"))
       .orderBy(col("doc_id"))
@@ -110,22 +103,13 @@ object Graph {
       .unionAll(docs.selectExpr("doc_id AS src", s"(doc_id * 2 + 1) % $n AS dst"))
       .localCheckpoint(eager = true) // reused every round
     val teleport = 15L * (PrScale / n) / 100
-    graft.plans.Aqe.without(s) {
-      var pr = docs.selectExpr("doc_id AS node", s"CAST(${PrScale / n} AS BIGINT) AS pr")
-      for (i <- 1 to PrIters) {
-        pr = edges.join(pr.withColumnRenamed("node", "src"), Seq("src"))
-          .selectExpr("dst", "pr DIV 2 AS c")
-          .groupBy(col("dst")).agg(sum(col("c")).as("sum_in"))
-          .selectExpr("dst AS node", s"$teleport + (85 * sum_in) DIV 100 AS pr")
-        // leaf every SECOND round (r6): plans stay O(2 rounds) and the same
-        // arithmetic runs in half the materialization barriers — at local
-        // scale each eager checkpoint is a full job whose scheduling floor
-        // dominates the tiny per-round frames
-        if (i % 2 == 0 || i == PrIters)
-          pr = pr.localCheckpoint(eager = true)
-      }
-      pr.selectExpr("node AS doc_id", "pr AS pr_e12").orderBy(col("doc_id"))
-    }
+    FixedPoint.iterate(s, "pagerank", PrIters)(
+      docs.selectExpr("doc_id AS node", s"CAST(${PrScale / n} AS BIGINT) AS pr")) { pr =>
+      edges.join(pr.withColumnRenamed("node", "src"), Seq("src"))
+        .selectExpr("dst", "pr DIV 2 AS c")
+        .groupBy(col("dst")).agg(sum(col("c")).as("sum_in"))
+        .selectExpr("dst AS node", s"$teleport + (85 * sum_in) DIV 100 AS pr")
+    }.selectExpr("node AS doc_id", "pr AS pr_e12").orderBy(col("doc_id"))
   }
 
   // The oracle unrolls the 8 iterations as a CTE chain (recursive CTEs cannot
@@ -249,51 +233,37 @@ object Graph {
       .unionAll(docs.selectExpr("doc_id AS src", s"(doc_id * 2 + 1) % $n AS dst",
         "CAST(1 + doc_id % 7 AS BIGINT) AS w"))
       .localCheckpoint(eager = true) // reused every round
-    graft.plans.Aqe.without(s) {
-      val seed = docs.filter(col("doc_id") === 0)
-        .selectExpr("doc_id AS node", "CAST(0 AS BIGINT) AS dist")
-        .localCheckpoint(eager = true)
+    val seed = docs.filter(col("doc_id") === 0)
+      .selectExpr("doc_id AS node", "CAST(0 AS BIGINT) AS dist")
+    // Shape kept AS-IS after measurement (r6): a union-of-leaves dist
+    // table with a min-per-node aggregate in the round join (removing the
+    // per-round anti-join + checkpoint) measured 10.9 s vs 5.7 s — the
+    // aggregate re-processes the whole discovered set every round and the
+    // plan grows with the round count, so the "one job fewer per round"
+    // trade loses. The checkpointed incremental dist table stands.
+    val (dist, _) = FixedPoint.converge(s, "sssp", SsspMaxRounds) {
+      val leaf = seed.localCheckpoint(eager = true)
       // the oracle's d0 CTE seeds node 0 UNCONDITIONALLY; a documents table
       // without doc_id 0 would make the engine return an empty frame (empty
       // frontier, immediate loop exit) while the oracle still emits phantom
       // distances — fail loudly instead of diverging silently
-      require(seed.count() == 1,
+      require(leaf.count() == 1,
         "g05 SSSP needs doc_id 0 as the source (the oracle seeds it " +
           "unconditionally) — the documents table has no such row")
-      // Shape kept AS-IS after measurement (r6): a union-of-leaves dist
-      // table with a min-per-node aggregate in the round join (removing the
-      // per-round anti-join + checkpoint) measured 10.9 s vs 5.7 s — the
-      // aggregate re-processes the whole discovered set every round and the
-      // plan grows with the round count, so the "one job fewer per round"
-      // trade loses. The checkpointed incremental dist table stands.
-      var dist = seed
-      var frontier = seed
-      var productive = 0
-      var done = false
-      while (!done) {
-        val improved = edges
-          .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-          .selectExpr("dst AS node", "dist + w AS cand")
-          .groupBy(col("node")).agg(min(col("cand")).as("cand"))
-          .join(dist, Seq("node"), "left")
-          .filter(col("dist").isNull || col("cand") < col("dist"))
-          .selectExpr("node", "cand AS dist")
-          .localCheckpoint(eager = true) // leaf per round: plans stay O(round)
-        if (improved.isEmpty) done = true
-        else {
-          productive += 1
-          require(productive <= SsspMaxRounds,
-            s"g05 SSSP exceeded $SsspMaxRounds productive rounds — the " +
-              "shortcut graph's hop diameter is O(log n), so the input is " +
-              "corrupt (or the oracle's unroll depth needs the same raise)")
-          dist = dist.join(improved, Seq("node"), "left_anti").union(improved)
-            .localCheckpoint(eager = true)
-          frontier = improved
-        }
-      }
-      graft.plans.Meters.set("sssp.rounds", productive.toLong)
-      dist.selectExpr("node AS doc_id", "dist").orderBy(col("doc_id"))
+      (leaf, leaf)
+    } { case ((dist, frontier), _) =>
+      val improved = edges
+        .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
+        .selectExpr("dst AS node", "dist + w AS cand")
+        .groupBy(col("node")).agg(min(col("cand")).as("cand"))
+        .join(dist, Seq("node"), "left")
+        .filter(col("dist").isNull || col("cand") < col("dist"))
+        .selectExpr("node", "cand AS dist")
+      FixedPoint.Round(improved, leaf =>
+        (dist.join(leaf, Seq("node"), "left_anti").union(leaf)
+          .localCheckpoint(eager = true), leaf))
     }
+    dist.selectExpr("node AS doc_id", "dist").orderBy(col("doc_id"))
   }
 
   val g05Sql: String = {
