@@ -33,15 +33,22 @@ object ExplainDump {
     "kg04_closure_events_per_month", "kg08_canonical_clusters",
     "kg17_entity_pagerank")
 
-  /** Plan text that differs per process: the edge cache's directory
-    * (`KgPipeline.edges`) and a lambda's class number and identity hash.
-    * The dump shows fixed tokens instead, so an unchanged plan dumps the
-    * same text run over run.
+  /** Plan text that differs per process or with what ran before (the edge
+    * cache's dir, lambda, RDD and exchange ids, an RDD's call site) is
+    * masked, and expression ids are renumbered per dump in order of first
+    * appearance, so an unchanged plan dumps the same text.
     */
-  private val EdgeCacheDir = """file:[^\[\]\s,]*/graft-edge-cache/[^\[\]\s,]+""".r
-  private val LambdaId = """\$Lambda\$\d+/0x\p{XDigit}+@\p{XDigit}+""".r
-  private def maskProcessIds(plan: String): String =
-    LambdaId.replaceAllIn(EdgeCacheDir.replaceAllIn(plan, "<edge-cache-dir>"), "\\$Lambda")
+  private val Masks = Seq(
+    """file:[^\[\]\s,]*/graft-edge-cache/[^\[\]\s,]+""".r -> "<edge-cache-dir>",
+    """\$Lambda\$\d+/0x\p{XDigit}+@\p{XDigit}+""".r -> "\\$Lambda",
+    """(\w*RDD)\[\d+\] at (\w+) at [\w$]+\.scala:\d+""".r -> "$1 at $2",
+    """plan_id=\d+""".r -> "plan_id=_")
+  private def maskProcessIds(plan: String): String = {
+    val ids = scala.collection.mutable.HashMap.empty[String, Int]
+    """(?<=\S)#(\d+)""".r.replaceAllIn(
+      Masks.foldLeft(plan) { case (p, (re, to)) => re.replaceAllIn(p, to) },
+      m => s"#${ids.getOrElseUpdate(m.group(1), ids.size + 1)}")
+  }
 
   private val FixpointNote =
     "NOTE: this query is an iterative fixpoint loop; the plan below is the\n" +

@@ -295,6 +295,7 @@ object Lab {
     if (e("d11_full")(Dedup.d11DupClusters(s, dir).count()))
       run.rounds(s"$dir:d11_cc_rounds", "cc.rounds")
     e("st06_full")(streaming.StreamingQueries.st06StreamPacking(s, dir).count())
+    e("x02_full")(queries.TrainingMix.x02ShardPacking(s, dir).count())
     Dedup.release()
   }
 

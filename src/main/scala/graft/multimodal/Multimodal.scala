@@ -263,12 +263,10 @@ object Multimodal {
     * spans cost their whitespace tokens; media placeholders a fixed 64;
     * link anchors 16; structural markers 1 control token), and the stream is
     * partitioned by MONTH (the corpus' natural shard key). The running token
-    * sum is computed HIERARCHICALLY (per-doc totals → doc-level prefix sum →
-    * per-doc windows with the prefix as offset; see the body comment), so no
-    * window task ever sorts more than one document's spans — at 100 TB the
-    * heavy pass is embarrassingly parallel per (month, doc), and the
-    * boundary rule (seq = tokens-before DIV budget) is the
-    * same streaming-pack rule x02 uses, overflowing by at most one span.
+    * sum is a plans.PrefixScan with the document as bucket, so no window
+    * task ever sorts more than one document's spans, and the boundary rule
+    * (seq = tokens-before DIV budget) is the same streaming-pack rule x02
+    * uses, overflowing by at most one span.
     * Output: per-sequence composition stats (the shard-manifest row a
     * training loader reads). Oracle: identical window+aggregate recomputed
     * by DuckDB over the NESTED aux dump.
@@ -284,34 +282,11 @@ object Multimodal {
       |ELSE CAST(1 AS BIGINT) END""".stripMargin.replace('\n', ' ')
 
   def m07SequencePacking(s: SparkSession, d: String): DataFrame = {
-    // TWO-PASS HIERARCHICAL PACKING (r6): the per-month running token sum is
-    // a decomposable prefix sum, so it is computed as (1) per-DOC totals,
-    // (2) a prefix sum over the tiny (month, doc) frame — doc-count rows,
-    // three columns — and (3) a per-doc window with the doc's prefix as
-    // offset. Identical output to the single window by construction
-    // (cum_before(doc, pos) = Σ earlier docs + Σ earlier spans in doc), but
-    // the span-level window is PARTITIONED BY (month, doc_id): at 100 TB a
-    // month's hundreds of GB no longer sort through ONE window task — the
-    // heavy pass is embarrassingly parallel per document, and only the
-    // doc-level metadata frame rides the per-month serial window.
-    // Exactly ONE exchange carries span rows — hashpartitioning
-    // (month, doc_id) for the within-doc window (the join reuses it, or the
-    // tiny offset side broadcasts). The doc-total pass collapses span rows
-    // MAP-SIDE (partial aggregation), so its exchange moves doc-level
-    // metadata only, and the per-month serial window runs over doc rows —
-    // three columns per document — not spans.
     val sp = graft.KgPipeline.corpusSpans(s, d)
       .selectExpr("substr(doc_id, 5, 7) AS month", "doc_id", "pos",
         "kind", "media_ref", s"$spanCostSql AS cost")
-    val docOffsets = sp.groupBy(col("month"), col("doc_id"))
-      .agg(sum(col("cost")).as("doc_cost"))
-      .selectExpr("month", "doc_id",
-        "COALESCE(SUM(doc_cost) OVER (PARTITION BY month ORDER BY doc_id " +
-          "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), CAST(0 AS BIGINT)) AS doc_offset")
-    sp.join(docOffsets, Seq("month", "doc_id"))
-      .selectExpr("month", "doc_id", "pos", "kind", "media_ref", "cost",
-        "doc_offset + COALESCE(SUM(cost) OVER (PARTITION BY month, doc_id ORDER BY pos " +
-          "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), CAST(0 AS BIGINT)) AS cum_before")
+    graft.plans.PrefixScan.exclusiveSum(sp, Seq("month"), bucket = "doc_id",
+        order = "pos", value = "cost", as = "cum_before")
       .selectExpr("month", "doc_id", "pos", "kind", "media_ref", "cost",
         s"cum_before DIV $SeqBudget AS seq_idx")
       .groupBy(col("month"), col("seq_idx"))

@@ -337,10 +337,11 @@ object Relational {
   // q16: EXACT per-group quantiles (p25/p50/p75) by RANK SELECTION — the
   // scale-correct exact path. Spark's percentile()/median() aggregates
   // buffer every group value in executor memory (an OOM hazard for a skewed
-  // group at 100 TB); rank selection instead sorts within the group
-  // partition (one window exchange) and picks the two bracketing elements
-  // per quantile, so memory is O(1) per row. All arithmetic stays integer:
-  // with 0-indexed position pos = ((n-1)·k) DIV 4 and remainder
+  // group at 100 TB); rank selection instead takes the value at rank r from
+  // the plans.PrefixScan bucket (q) whose rank range covers r — no row-level
+  // window or sort; the bucket frame has at most groups × distinct q rows,
+  // and TPC-H's floor(l_quantity) takes the values 1–50. All arithmetic
+  // stays integer: with 0-indexed position pos = ((n-1)·k) DIV 4 and remainder
   // r = ((n-1)·k) % 4 for the k/4 quantile, the interpolated value ×4 is
   // (4-r)·v[pos] + r·v[pos+1] — a BIGINT. The oracle recomputes through a
   // DIFFERENT algorithm (DuckDB's native quantile_cont; exact here because
@@ -351,14 +352,15 @@ object Relational {
     // moment a quantity is fractional
     val li = Tables.lineitem(s, d)
       .select(col("l_returnflag"), floor(col("l_quantity")).cast(LongType).as("q"))
-    val ranked = li.withColumn("rk",
-      row_number().over(Window.partitionBy("l_returnflag").orderBy(col("q"))))
-    val counts = li.groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"))
+    val ranked = graft.plans.PrefixScan.bucketOffsets(li, Seq("l_returnflag"),
+      bucket = "q", value = "1")
+    val counts = ranked.groupBy(col("l_returnflag")).agg(sum(col("bucket_total")).as("n"))
+    def rk(rank: String) = s"$rank BETWEEN bucket_offset + 1 AND bucket_offset + bucket_total"
     def qx4(k: Int): Column = {
       val pos0 = s"((n - 1) * $k) DIV 4"
       val r = s"((n - 1) * $k) % 4"
-      (max(when(expr(s"rk = $pos0 + 1"), expr(s"(4 - $r) * q"))) +
-        coalesce(max(when(expr(s"rk = $pos0 + 2 AND $r > 0"), expr(s"$r * q"))),
+      (max(when(expr(rk(s"$pos0 + 1")), expr(s"(4 - $r) * q"))) +
+        coalesce(max(when(expr(s"${rk(s"$pos0 + 2")} AND $r > 0"), expr(s"$r * q"))),
           lit(0L)))
     }
     ranked.join(counts, Seq("l_returnflag"))

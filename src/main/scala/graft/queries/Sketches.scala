@@ -24,7 +24,7 @@ object Sketches {
 
   /** Hex nibble of a string expression at 1-based position `i` → 0..15
     * (instr is 1-based and identical in both engines). */
-  private def nib(h: String, i: Int): String =
+  private[queries] def nib(h: String, i: Int): String =
     s"(instr('0123456789abcdef', substr($h, $i, 1)) - 1)"
 
   // ---- sk01: HyperLogLog distinct sketch ----------------------------------
@@ -321,29 +321,28 @@ object Sketches {
   // the IDENTICAL sample. Merge = plain union (a 1000-executor tree-agg
   // concatenates per-partition samples; expected size p·n per group, tuned
   // by nibble count — each extra nibble is a 16× reduction). Readout = rank
-  // selection inside the sample (q16's O(1)-memory algorithm at 1/16 the
+  // selection inside the sample (q16's bucketed prefix scan at 1/16 the
   // rows); calibration = each estimate's TRUE cdf interval against the FULL
   // table (one scan + a broadcast of the k-row estimate frame), with the
   // DKW-style rank-error bound err ≤ 3/√m checked in INTEGER form
   // (err_e6² · m ≤ 9·10¹² — no cross-engine sqrt enters the gate).
   def sk04QuantileSketch(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val h = "md5(concat(CAST(l_orderkey AS STRING), ':', " +
       "CAST(l_linenumber AS STRING)))"
     val li = Tables.lineitem(s, d).selectExpr("l_returnflag",
       "CAST(floor(l_quantity) AS BIGINT) AS q", s"${nib(h, 1)} AS coin")
-    val sample = li.filter(col("coin") === 0)
-    val ranked = sample.withColumn("rk", row_number().over(
-      Window.partitionBy("l_returnflag").orderBy("q")))
-    val mSz = sample.groupBy(col("l_returnflag")).agg(count(lit(1)).as("m"))
+    val ranked = graft.plans.PrefixScan.bucketOffsets(li.filter(col("coin") === 0),
+      Seq("l_returnflag"), bucket = "q", value = "1")
+    val mSz = ranked.groupBy(col("l_returnflag")).agg(sum(col("bucket_total")).as("m"))
     // the k/4-quantile estimate = the sample element at 0-indexed rank
     // ((m-1)·k) DIV 4 (lower selection, no interpolation — stays a data
-    // value, so the true-cdf probe below is well-defined). Ties in q need no
-    // tiebreak: every row at the selected rank carries the same q.
+    // value, so the true-cdf probe below is well-defined): the q bucket
+    // whose rank range covers it, so ties in q need no tiebreak.
     val ests = ranked.join(mSz, Seq("l_returnflag"))
-      .selectExpr("l_returnflag", "m", "rk", "q",
+      .selectExpr("l_returnflag", "m", "q", "bucket_offset", "bucket_total",
         "explode(array(1, 2, 3)) AS quantile_k")
-      .filter(expr("rk = ((m - 1) * quantile_k) DIV 4 + 1"))
+      .filter(expr("((m - 1) * quantile_k) DIV 4 + 1 " +
+        "BETWEEN bucket_offset + 1 AND bucket_offset + bucket_total"))
       .selectExpr("l_returnflag", "quantile_k", "m AS m_sample", "q AS est_q")
     val nSz = li.groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"))
     li.join(broadcast(ests), Seq("l_returnflag"))

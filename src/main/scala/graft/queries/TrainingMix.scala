@@ -18,10 +18,8 @@ import org.apache.spark.sql.functions._
   * Scale notes (100 TB):
   *  - x01 is a narrow scan: the keep/drop decision is per-row arithmetic on
   *    md5(doc_id); no shuffle at any scale.
-  *  - x02 windows are PARTITIONED (by lang here; by (lang, date-bucket) at
-  *    real scale so each window partition stays executor-sized) — a single
-  *    global ORDER BY window would serialize the corpus through one task and
-  *    is exactly what this formulation avoids.
+  *  - x02's running sum is a plans.PrefixScan: its row-level window is
+  *    partitioned by (lang, 4096-id doc bucket), never by lang alone.
   *  - d07's base-side fingerprints/signatures are, operationally, tables you
   *    write once when the base corpus is ingested and reuse for every
   *    increment; both probes are semi joins on hashed keys (no candidate-pair
@@ -29,13 +27,11 @@ import org.apache.spark.sql.functions._
   *    and broadcastable when the increment is small.
   */
 object TrainingMix {
+  import Sketches.nib
 
   // 4 nibbles of md5(doc_id) → uniform u16 in [0, 65536): the deterministic
   // coin every sampling decision flips. doc_id is BIGINT in the input table —
   // cast to string before hashing (both engines render int64 identically).
-  private def nib(h: String, i: Int): String =
-    s"(instr('0123456789abcdef', substr($h, $i, 1)) - 1)"
-
   private val u16 = {
     val h = "md5(CAST(doc_id AS STRING))"
     s"(((${nib(h, 1)} * 16 + ${nib(h, 2)}) * 16 + ${nib(h, 3)}) * 16 + ${nib(h, 4)})"
@@ -111,14 +107,18 @@ object TrainingMix {
   private val nTok = "CAST(length(text) - length(replace(text, ' ', '')) + 1 AS BIGINT)"
 
   def x02ShardPacking(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .selectExpr("doc_id", "lang", s"$nTok AS n_tokens")
-      .selectExpr("doc_id", "lang", "n_tokens",
-        "COALESCE(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id " +
-          "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), CAST(0 AS BIGINT)) AS cum_before")
-      .selectExpr("doc_id", "lang", "n_tokens",
-        s"cum_before DIV $ShardBudget AS shard_idx")
+    packByLang(s, d, ShardBudget, "shard_idx")
+
+  /** x02's and st06's packing: `idx` = the doc's language's tokens before it
+    * (doc_id order) DIV `budget`, a plans.PrefixScan over 4096-id buckets. */
+  def packByLang(s: SparkSession, d: String, budget: Long, idx: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+      .selectExpr("doc_id", "lang", s"$nTok AS n_tokens", "doc_id DIV 4096 AS bkt")
+    graft.plans.PrefixScan.exclusiveSum(docs, Seq("lang"), bucket = "bkt",
+        order = "doc_id", value = "n_tokens", as = "cum_before")
+      .selectExpr("doc_id", "lang", "n_tokens", s"cum_before DIV $budget AS $idx")
       .orderBy(col("doc_id"))
+  }
 
   val x02Sql: String =
     s"""WITH toks AS (SELECT doc_id, lang, $nTok AS n_tokens FROM documents),

@@ -96,8 +96,8 @@ object StreamJobs {
     * (maxFilesPerTrigger / maxBytesPerTrigger on a real source), never the
     * whole stream. This state machine is STREAM-ONLY: the batch
     * driver-contract entry (StreamingQueries.st06StreamPacking) computes
-    * the identical assignment with a two-pass hierarchical window instead
-    * of routing the full corpus through per-lang groups.
+    * the identical assignment with a bucketed prefix scan (plans.PrefixScan)
+    * instead of routing the full corpus through per-lang groups.
     */
   val PackBudget = 4096L
 

@@ -93,37 +93,12 @@ object StreamingQueries {
       |WHERE c.event_type = 'click' AND x.event_type = 'error'
       |ORDER BY click_id, error_id""".stripMargin
 
-  // st06: streaming sequence packing, batch form. The STREAM path keeps the
-  // per-lang cursor state machine (StreamJobs.packState — order dependence
-  // is the ingestion contract there, and StreamJobsSpec proves stream ==
-  // this batch plan == the SQL window truth). The BATCH form must not
-  // inherit that serial reducer: a per-lang window is ONE task per language
-  // (cardinality ~5 — a genuine 100 TB scale-killer), so the running sum is
-  // computed hierarchically, m07's two-pass shape — (1) totals per doc_id
-  // BUCKET (4096-id ranges; bucketing by doc_id DIV n is monotone in
-  // doc_id, so (bucket, doc_id) order == doc_id order), (2) a prefix sum
-  // over the tiny (lang, bucket) frame, (3) bucket-local windows with the
-  // bucket prefix as offset. Identical output by construction; the heavy
-  // window is partitioned by (lang, bucket) with ≤ 4096 docs per task.
-  private val PackBucketIds = 4096L
-
-  def st06StreamPacking(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-      .selectExpr("doc_id", "lang",
-        "CAST(length(text) - length(replace(text, ' ', '')) + 1 AS BIGINT) AS n_tokens")
-      .withColumn("bkt", expr(s"doc_id DIV $PackBucketIds"))
-    val offsets = docs.groupBy(col("lang"), col("bkt"))
-      .agg(sum(col("n_tokens")).as("bkt_tokens"))
-      .selectExpr("lang", "bkt",
-        "COALESCE(SUM(bkt_tokens) OVER (PARTITION BY lang ORDER BY bkt " +
-          "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), CAST(0 AS BIGINT)) AS bkt_offset")
-    docs.join(offsets, Seq("lang", "bkt"))
-      .selectExpr("doc_id", "lang", "n_tokens",
-        "(bkt_offset + COALESCE(SUM(n_tokens) OVER (PARTITION BY lang, bkt ORDER BY doc_id " +
-          "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), CAST(0 AS BIGINT))) " +
-          s"DIV ${StreamJobs.PackBudget} AS seq_idx")
-      .orderBy(col("doc_id"))
-  }
+  // st06: streaming sequence packing, batch form: x02's bucketed packing at
+  // the stream's budget. The STREAM path keeps the per-lang cursor state
+  // machine (StreamJobs.packState: order dependence is the ingestion
+  // contract there); StreamJobsSpec proves stream == this batch plan.
+  def st06StreamPacking(s: SparkSession, d: String): DataFrame =
+    graft.queries.TrainingMix.packByLang(s, d, StreamJobs.PackBudget, "seq_idx")
 
   val st06Sql: String =
     s"""WITH toks AS (

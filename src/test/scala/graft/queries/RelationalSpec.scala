@@ -58,15 +58,20 @@ class RelationalSpec extends AnyFunSuite {
   /** q16 rank-selection arithmetic pinned by hand against the textbook
     * (n-1)·p linear-interpolation definition, covering an odd group (all
     * remainders 0) and an even group (remainders 1/2/3) — independent of the
-    * DuckDB quantile_cont oracle.
+    * DuckDB quantile_cont oracle. Groups C and D repeat values, so the
+    * bracketing ranks fall inside and at the edges of a run of ties.
     */
   test("q16 rank-selection quantiles match hand-computed goldens") {
     import spark.implicits._
     val d = Files.createTempDirectory("graft_q16").toString
     // group A: 1..9 (odd) → p25=3, p50=5, p75=7 (×4: 12/20/28)
     // group B: 1..10 (even) → p25=3.25, p50=5.5, p75=7.75 (×4: 13/22/31)
+    // group C: 2,2,2,2,7,7,9 → p25=2, p50=2, p75=7 (×4: 8/8/28)
+    // group D: 1,1,3,3 → p25=1, p50=2, p75=3 (×4: 4/8/12)
     val rows = (1 to 9).map(q => ("A", q.toDouble)) ++
-      (1 to 10).map(q => ("B", q.toDouble))
+      (1 to 10).map(q => ("B", q.toDouble)) ++
+      Seq(2, 2, 2, 2, 7, 7, 9).map(q => ("C", q.toDouble)) ++
+      Seq(1, 1, 3, 3).map(q => ("D", q.toDouble))
     rows.toDF("l_returnflag", "l_quantity")
       .write.mode("overwrite").parquet(s"$d/lineitem.parquet")
     val got = Relational.queries("q16_quantiles_rank_select")(spark, d)
@@ -74,7 +79,9 @@ class RelationalSpec extends AnyFunSuite {
         r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(got.toSeq == Seq(
       ("A", 9L, 12L, 20L, 28L),
-      ("B", 10L, 13L, 22L, 31L)))
+      ("B", 10L, 13L, 22L, 31L),
+      ("C", 7L, 8L, 8L, 28L),
+      ("D", 4L, 4L, 8L, 12L)))
   }
 
   /** q17 interval-join semantics pinned by hand, independent of the DuckDB

@@ -155,4 +155,39 @@ class SketchesSpec extends AnyFunSuite {
     // structural Bloom guarantee: every build key probes positive
     buildKeys.foreach(u => assert(maybe(u), s"false negative for $u"))
   }
+
+  // ---- sk04 ----------------------------------------------------------------
+
+  test("sk04 estimates and calibration match a sequential sample-and-rank recompute") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft_sk04").toString
+    // 2,000 rows over three flags, quantities 1–50 with fractions (floored)
+    // and heavy ties, so sampled ranks land inside and at the edges of runs
+    val rows = (0 until 2000).map { i =>
+      (i / 4 + 1L, i % 4 + 1, Seq("A", "N", "R")(i % 3), (i * 37 % 50) + 1 + (i % 2) * 0.5)
+    }
+    rows.toDF("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity")
+      .write.mode("overwrite").parquet(s"$d/lineitem.parquet")
+
+    val li = rows.map { case (ok, ln, flag, qty) =>
+      (flag, math.floor(qty).toLong, nib(md5hex(s"$ok:$ln"), 1)) }
+    val expected = li.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (flag, g) =>
+      val qs = g.map(_._2)
+      val sample = g.filter(_._3 == 0).map(_._2).sorted
+      val (n, m) = (qs.size.toLong, sample.size.toLong)
+      assert(m > 0, s"flag $flag sampled no row")
+      (1 to 3).map { k =>
+        val est = sample((((m - 1) * k) / 4).toInt)
+        val lo = 1000000L * qs.count(_ < est) / n
+        val hi = 1000000L * qs.count(_ <= est) / n
+        val target = k * 250000L
+        val err = if (lo > target) lo - target else if (hi < target) target - hi else 0L
+        Seq[Any](flag, k.toLong, n, m, est, lo, hi, err,
+          if (err * err * m <= 9000000000000L) 1L else 0L)
+      }
+    }
+    val got = Sketches.queries("sk04_quantile_sketch")(spark, d).collect().toSeq
+      .map(r => r.getString(0) +: (1 until r.length).map(i => r.getAs[Number](i).longValue))
+    assert(got == expected)
+  }
 }
