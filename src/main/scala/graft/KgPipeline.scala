@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kg._
 import graft.canon.ConnectedComponents
+import graft.plans.{Caches, SessionCache}
 
 /** KG-construction pipeline facade: deterministic synthetic span corpus →
   * parse → enrich → canonicalize → triples (graft.kg.Pipeline), plus the
@@ -15,34 +16,32 @@ import graft.canon.ConnectedComponents
 object KgPipeline {
 
   // cache the triple table per (session, sf dir) — queries share one pipeline
-  // run. plans.SessionCache carries the whole lifecycle discipline (session-
-  // reference keys, computeIfAbsent single-build, dead-session purge that is
-  // safe against same-map reentrancy — the edges builder calls triples(), so
-  // a purge-on-every-access scheme violated CHM's "mapping function must not
-  // modify this map" contract; see SessionCache's scaladoc).
-  private val cache = new graft.plans.SessionCache[Dataset[Triple]]("kg-triples")
+  // run (SessionCache: lifecycle, reentrancy and release)
+  private val cache = new SessionCache[Dataset[Triple]]("kg-triples", Caches.free)
   // one shared date-deduped (subj, pred, obj) edge projection: article-derived
   // triples repeat once per mention date (partition key), so every graph-shaped
   // query (kg02-kg08) needs the same distinct — run the shuffle ONCE, not per
   // query. Derived predicates of this cache are unique per (subj, obj).
-  private val edgeCache = new graft.plans.SessionCache[DataFrame]("kg-edges")
+  // A value is (parquet dir, frame); freeing it deletes the dir.
+  private val edgeCache =
+    new SessionCache[(String, DataFrame)]("kg-edges", e => deleteDir(e._1))
   // the triple build and kg10/kg12/kg13 all need the enriched-article frame
   // and kg13 needs kg12's metrics table — cache both per sf dir so the
   // enrichment dataflow runs once per session instead of once per consumer
   private val enrichedCache =
-    new graft.plans.SessionCache[Dataset[EnrichedArticle]]("kg-enriched")
-  private val metricsCache = new graft.plans.SessionCache[DataFrame]("kg-metrics")
+    new SessionCache[Dataset[EnrichedArticle]]("kg-enriched", Caches.free)
+  private val metricsCache = new SessionCache[DataFrame]("kg-metrics", Caches.free)
   // kg14/m05/m06 all consume the interleaved corpus span-by-span, and the
   // nested spans-array parquet decode dominates each of them (r4 driver lap:
   // m05 15.9 s + m06 14.6 s vs ~1 s of actual window/agg work) — decode and
   // posexplode ONCE per (session, sf) and share the flat projection, exactly
   // the treatment the triple/edge/enriched caches got in r4
   private val corpusSpansCache =
-    new graft.plans.SessionCache[DataFrame]("kg-corpus-spans")
+    new SessionCache[DataFrame]("kg-corpus-spans", Caches.free)
   // kg15 (readout), kg17 (PageRank input) and the kg_cooc oracle dump all
   // need the entity co-occurrence aggregate, whose prologue is the 5-hop
   // association chain — build it once per (session, sf)
-  private val coocCache = new graft.plans.SessionCache[DataFrame]("kg-cooc")
+  private val coocCache = new SessionCache[DataFrame]("kg-cooc", Caches.free)
 
   /** The triple table, cached per sf. It is built over the session's
     * enriched-article leaf ([[enriched]]), so a session enriches once for
@@ -55,30 +54,14 @@ object KgPipeline {
   def enriched(spark: SparkSession, sfDir: String): Dataset[EnrichedArticle] =
     enrichedCache.get(spark, sfDir) {
       val (e, stageCaches) = Pipeline.enrichedArticlesTracked(spark, Synth.paramsFor(sfDir))
-      try graft.plans.Caches.leaf(e) // eager materialization + leaf plan
+      try Caches.leaf(e) // eager materialization + leaf plan
       finally stageCaches.foreach(_.unpersist(blocking = false))
     }
 
-  /** Drop every per-sf cached block (bench/verify hygiene). Caches.free
-    * unpersists the checkpointed RDD behind each LogicalRDD leaf (a plain
-    * Dataset.unpersist is a no-op there) and deletes reliable-checkpoint
-    * files so repeated build cycles don't grow the checkpoint store.
+  /** Frees every shared cache in the JVM ([[SessionCache.releaseAll]]);
+    * kept as the hook the driver mains call.
     */
-  def release(): Unit = {
-    cache.foreachValue(graft.plans.Caches.free(_)); cache.clear()
-    // the edge cache holds no blocks, only its parquet directories
-    edgeCache.clear()
-    deleteEdgeDirs()
-    enrichedCache.foreachValue(graft.plans.Caches.free(_)); enrichedCache.clear()
-    metricsCache.foreachValue(graft.plans.Caches.free(_)); metricsCache.clear()
-    corpusSpansCache.foreachValue(graft.plans.Caches.free(_)); corpusSpansCache.clear()
-    coocCache.foreachValue(graft.plans.Caches.free(_)); coocCache.clear()
-    // the similarity family's s01/s02 result caches ride on this hook: the
-    // FROZEN driver mains (Bench/Verify) call exactly KgPipeline.release()
-    // and Dedup.release(), so this is where non-kg shared frames must clean
-    // up without touching the hashed harness files
-    graft.queries.Similarity.release()
-  }
+  def release(): Unit = SessionCache.releaseAll()
 
   /** The interleaved corpus, exploded to one row per span with its 1-based
     * array position — the shared input of every span-shaped consumer (kg14
@@ -91,7 +74,7 @@ object KgPipeline {
     */
   def corpusSpans(spark: SparkSession, sfDir: String): DataFrame =
     corpusSpansCache.get(spark, sfDir)(
-      graft.plans.Caches.leaf(
+      Caches.leaf(
         kg.CorpusStore.scan(spark, kg.Synth.paramsFor(sfDir))
           .selectExpr("doc_id", "posexplode(spans) AS (j, sp)")
           .selectExpr("doc_id", "CAST(j + 1 AS BIGINT) AS pos",
@@ -143,7 +126,7 @@ object KgPipeline {
       // identity hashes are reproducible across JVMs (fixed HotSpot PRNG
       // seed), so two CONCURRENT JVMs on the same sf (the multi-JVM bench
       // workflow) could resolve to the same dir without the pid component.
-      // release() deletes it.
+      // Freeing the entry deletes it.
       val dir = EdgeCacheRoot + "/" + java.lang.Integer.toHexString(sfDir.hashCode) +
         "-" + java.lang.Integer.toHexString(System.identityHashCode(spark)) +
         "-p" + ProcessHandle.current().pid()
@@ -151,33 +134,23 @@ object KgPipeline {
         .filter(col("pred").isin(EdgePreds: _*))
         .select(col("subj"), col("pred"), col("obj")).distinct()
         .write.mode("overwrite").partitionBy("pred").parquet(dir)
-      edgeDirsWritten.add(dir)
       // partition values round-trip URL-escaped directory names
       // (EdgeLayoutSpec compares them to the triples); the select restores
       // the (subj, pred, obj) column order
-      spark.read.parquet(dir).select(col("subj"), col("pred"), col("obj"))
-    }
+      (dir, spark.read.parquet(dir).select(col("subj"), col("pred"), col("obj")))
+    }._2
 
   private val EdgeCacheRoot =
     sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-edge-cache"
 
-  // every edge-cache directory this JVM wrote, deleted by exact path on
-  // release() and, for a JVM that ends without a last release() (a test
-  // run), at exit: the hook runs before Hadoop closes its file systems
-  private val edgeDirsWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  // a JVM that ends without a last release() (a test run) still deletes its
+  // edge dirs: the hook runs before Hadoop closes its file systems
   org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
-    () => deleteEdgeDirs(), org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 1)
+    () => edgeCache.freeAll(), org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 1)
 
-  private def deleteEdgeDirs(): Unit = {
-    edgeDirsWritten.forEach { p =>
-      try {
-        val path = new org.apache.hadoop.fs.Path(p)
-        path.getFileSystem(new org.apache.hadoop.conf.Configuration())
-          .delete(path, true)
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
-    edgeDirsWritten.clear()
+  private def deleteDir(dir: String): Unit = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    path.getFileSystem(new org.apache.hadoop.conf.Configuration()).delete(path, true)
   }
 
   /** Flagship: full pipeline at tiny scale — returns the triple DataFrame. */
@@ -221,17 +194,16 @@ object KgPipeline {
     // unmaterialized projection re-opened the edge parquet per round (a
     // pruned but still per-round scan; at 100 TB that is rounds × a
     // partition read). One small leaf instead (r6).
-    val during = t.filter(col("pred") === edgePred(Ns.COY + "isOccuringDuring"))
-      .select(col("subj").as("child"), col("obj").as("parent"))
-      .localCheckpoint(true)
+    val during = Caches.leaf(t.filter(col("pred") === edgePred(Ns.COY + "isOccuringDuring"))
+      .select(col("subj").as("child"), col("obj").as("parent")))
     // seed: the most-referenced parent topic (deterministic). Materialized
     // HERE, before Reach.closure's AQE-off window: this groupBy + global
     // sort runs over the full edge set — the one non-tiny frame of the
     // query — and must keep AQE's coalescing, unlike the loop's per-round
     // frames.
-    val seed = during.groupBy(col("parent")).count()
+    val seed = Caches.leaf(during.groupBy(col("parent")).count()
       .orderBy(col("count").desc, col("parent")).limit(1)
-      .select(col("parent").as("node")).localCheckpoint(true)
+      .select(col("parent").as("node")))
     // fixpoint frontier loop (canon.Reach): the oracle's recursive CTE has
     // no depth cap, and neither may this side — a fixed 8-round cap here
     // silently dropped the sf0.1 graph's depth-9 tail (r4 cross-SF find)
@@ -435,7 +407,7 @@ object KgPipeline {
     metricsCache.get(s, d) {
       val (raw, perDay) = kg12MonthlyMetricsUncached(s, d)
       // eager leaf materialization; kg13's window reads blocks, not a re-run
-      try graft.plans.Caches.leaf(raw)
+      try Caches.leaf(raw)
       finally perDay.unpersist(blocking = false)
     }
 
@@ -628,13 +600,13 @@ object KgPipeline {
       // per self-join side above the reused exchange, so the "fewer
       // barriers" plan loses. The leaf is tiny (distinct (event, wd)
       // associations) and both self-join sides read its blocks.
-      val eventWd = assocChain(s, d, eventsOnly = true).eventWd.distinct()
-        .localCheckpoint(true) // feeds the size guard and both self-join sides
+      val eventWd = Caches.leaf(assocChain(s, d, eventsOnly = true).eventWd
+        .distinct()) // feeds the size guard and both self-join sides
       val ok = eventWd.join(
         eventWd.groupBy(col("event")).agg(count(lit(1)).as("k"))
           .filter(col("k") <= Kg15MaxEntities).select(col("event")),
         Seq("event"), "left_semi")
-      graft.plans.Caches.leaf(
+      Caches.leaf(
         ok.as("x").join(ok.as("y"),
             col("x.event") === col("y.event") && col("x.wd") < col("y.wd"))
           .select(col("x.wd").as("wd_a"), col("y.wd").as("wd_b"))
@@ -650,7 +622,7 @@ object KgPipeline {
     * pattern, which is the only hash-exact path for numeric loops — with
     * per-node WEIGHTED mass split: a node's rank flows to each neighbor in
     * proportion (pr * w) DIV wtot, so heavily co-mentioned pairs pull rank.
-    * Every round is one join + one aggregate over a localCheckpoint leaf
+    * Every round is one join + one aggregate over a leaf
     * (plans stay O(round)); 8 rounds on plans.FixedPoint. The
     * DuckDB oracle recomputes the identical iteration as an unrolled
     * MATERIALIZED CTE chain over the dumped co-occurrence edges
@@ -662,10 +634,10 @@ object KgPipeline {
   def kg17EntityPagerank(s: SparkSession, d: String): DataFrame = {
     val cooc = cooccurrence(s, d)
       .select(col("wd_a"), col("wd_b"), col("n_events"))
-    val edges = cooc.selectExpr("wd_a AS src", "wd_b AS dst", "n_events AS w")
-      .unionAll(cooc.selectExpr("wd_b AS src", "wd_a AS dst", "n_events AS w"))
-      .localCheckpoint(true) // reused every round (plus wtot + nodes below)
-    val nodes = edges.select(col("src").as("node")).distinct().localCheckpoint(true)
+    // reused every round (plus wtot + nodes below)
+    val edges = Caches.leaf(cooc.selectExpr("wd_a AS src", "wd_b AS dst", "n_events AS w")
+      .unionAll(cooc.selectExpr("wd_b AS src", "wd_a AS dst", "n_events AS w")))
+    val nodes = Caches.leaf(edges.select(col("src").as("node")).distinct())
     // ONE setup aggregate for both loop preconditions (r6: the node count
     // and the weight guard were two separate collect jobs)
     val guard = edges.selectExpr("count(DISTINCT src) AS n", "max(w) AS m")
@@ -680,7 +652,7 @@ object KgPipeline {
       s"kg17 edge weight $maxW would overflow the scaled-integer rank " +
         "product (Kg17Scale * w approaches Long range) — rescale first")
     val wtot = edges.groupBy(col("src")).agg(sum(col("w")).as("wtot"))
-    val edgesW = edges.join(wtot, Seq("src")).localCheckpoint(true)
+    val edgesW = Caches.leaf(edges.join(wtot, Seq("src")))
     val teleport = 15L * (Kg17Scale / n) / 100
     graft.plans.FixedPoint.iterate(s, "salience", Kg17Iters)(
       nodes.selectExpr("node", s"CAST(${Kg17Scale / n} AS BIGINT) AS pr")) { pr =>

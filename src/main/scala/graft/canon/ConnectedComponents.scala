@@ -2,7 +2,7 @@ package graft.canon
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.plans.FixedPoint
+import graft.plans.{Caches, FixedPoint}
 
 /** Distributed connected components over a DataFrame edge list — the
   * canonicalization pass of the KG pipeline (merges aliased entities via
@@ -37,10 +37,9 @@ object ConnectedComponents {
     try FixedPoint.converge(edges.sparkSession, "cc", maxIter, countConfirming = true)(
       // init: component = min(self, direct neighbors); every node appears as
       // `u` in the symmetrized edge list.
-      sym.groupBy(col("u").as("node"))
+      Caches.leaf(sym.groupBy(col("u").as("node"))
         .agg(min(col("v")).as("mv"))
-        .select(col("node"), least(col("node"), col("mv")).as("comp"))
-        .localCheckpoint(eager = true)) { (assign, _) =>
+        .select(col("node"), least(col("node"), col("mv")).as("comp")))) { (assign, _) =>
       // 1-hop propagation: comp'(n) = min(comp(n), min_{v∈N(n)} comp(v));
       // the previous assignment rides along so the change count is observed
       // on the checkpointed result, not a join + recompute

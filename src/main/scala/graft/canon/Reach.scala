@@ -2,7 +2,7 @@ package graft.canon
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.plans.FixedPoint
+import graft.plans.{Caches, FixedPoint}
 
 /** Downward reachability closure over a (child, parent) edge list: every
   * node reachable from `seed` by repeatedly following parent→child edges.
@@ -27,7 +27,7 @@ object Reach {
     */
   def closure(childParent: DataFrame, seed: DataFrame, maxRounds: Int = 64): DataFrame =
     FixedPoint.converge(childParent.sparkSession, "reach", maxRounds) {
-      val s = seed.select(col("node")).localCheckpoint(true)
+      val s = Caches.leaf(seed.select(col("node")))
       (s, s)
     } { case ((reach, frontier), round) =>
       val next = childParent
@@ -42,7 +42,7 @@ object Reach {
       // were all in blocks already
       FixedPoint.Round(next, leaf => {
         val r = reach.union(leaf)
-        (if (round % 8 == 0) r.localCheckpoint(true) else r, leaf)
+        (if (round % 8 == 0) Caches.leaf(r) else r, leaf)
       })
     }._1
 }

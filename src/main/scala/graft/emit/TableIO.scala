@@ -32,6 +32,11 @@ object TableIO {
       metrics: Map[String, Long] = Map.empty)
   case class Manifest(snapshotId: Long, partitions: Map[String, PartitionMeta])
 
+  // write-exchange salt buckets per partition value, and the file-size
+  // bound within one task (see replacePartitions)
+  private val SaltsPerPartition = 4
+  private val MaxRecordsPerFile = 5000000L
+
   private def manifestDir(table: String): Path = Paths.get(table, "_manifests")
   private def dataDir(table: String): Path = Paths.get(table, "data")
 
@@ -136,22 +141,17 @@ object TableIO {
     // exchange by the partition column alone puts one date on ONE task and
     // ONE file — at 100 TB a hot date serializes on a single core and emits
     // a multi-GB file. The salt spreads each date over up to
-    // `graft.write.tasksPerPartition` tasks (hash of the payload columns, so
-    // the spread is even), and maxRecordsPerFile bounds file sizes within a
-    // task. Small dates still produce 1 file (empty salt buckets write
-    // nothing).
+    // SaltsPerPartition tasks (hash of the payload columns, so the spread is
+    // even), and MaxRecordsPerFile bounds file sizes within a task. Small
+    // dates still produce 1 file (empty salt buckets write nothing).
     val spark0 = df.sparkSession
-    val salts = math.max(1,
-      spark0.conf.get("graft.write.tasksPerPartition", "4").toInt)
-    val maxRecords =
-      spark0.conf.get("graft.write.maxRecordsPerFile", "5000000").toLong
     val payloadCols = df.columns.filterNot(_ == partCol).map(col)
     val slice = df.filter(col(partCol).isin(keys: _*))
       // align the write exchange with the partition spec (+ bounded salt); the
       // explicit width keeps AQE from coalescing the salt buckets of a small
       // slice back into one task
       .repartition(spark0.conf.get("spark.sql.shuffle.partitions").toInt,
-        col(partCol), pmod(hash(payloadCols: _*), lit(salts)))
+        col(partCol), pmod(hash(payloadCols: _*), lit(SaltsPerPartition)))
     def partDir(k: String): Path = dataDir(table).resolve(s"$partCol=$k")
     def parquetFiles(k: String): Set[String] =
       if (!Files.isDirectory(partDir(k))) Set.empty
@@ -166,7 +166,7 @@ object TableIO {
       .mode(SaveMode.Overwrite)
       .partitionBy(partCol)
       .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile", maxRecords)
+      .option("maxRecordsPerFile", MaxRecordsPerFile)
       .parquet(dataDir(table).toString)
     // dynamic overwrite replaces the directory of every key that got rows
     // with files named after this write's job id, and leaves untouched any

@@ -141,18 +141,16 @@ object Pipeline {
       enriched: Dataset[EnrichedArticle],
       onlyDates: Option[Set[String]] = None): Dataset[Triple] = {
     val b = trackedBuild(spark, Synth.paramsFor(sfDir), onlyDates, Some(enriched))
-    // localCheckpoint, not persist: materializes the same MEMORY_AND_DISK
-    // blocks AND truncates the logical plan to a leaf. The full build plan
-    // is hundreds of nodes; downstream kg queries embed up to ~8 copies of
-    // this frame, and with the un-truncated lineage every Dataset
-    // transformation re-analyzes all of them — measured ~7 s of ANALYSIS per
-    // chain query at sf0.1, dwarfing planning (0.5 s) and execution (2 s).
-    // Blocks are released when the frame becomes unreachable after
-    // KgPipeline.release() drops the reference (ContextCleaner), or at JVM
-    // exit.
+    // a leaf, not persist: materializes the same MEMORY_AND_DISK blocks AND
+    // truncates the logical plan. The full build plan is hundreds of nodes;
+    // downstream kg queries embed up to ~8 copies of this frame, and with
+    // the un-truncated lineage every Dataset transformation re-analyzes all
+    // of them — measured ~7 s of ANALYSIS per chain query at sf0.1, dwarfing
+    // planning (0.5 s) and execution (2 s). The caller owns the leaf:
+    // KgPipeline's triple cache frees it (Caches.free) on
+    // SessionCache.releaseAll.
     // finally: a failed checkpoint job must still release the stage caches
     // (same failure-path hygiene as the other cache builders)
-    // (graft.plans.Caches: reliable checkpoint under graft.cache.reliable)
     try graft.plans.Caches.leaf(b.triples)
     finally b.releaseCaches()
   }

@@ -1,15 +1,22 @@
 package graft.plans
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Dataset
+import scala.util.control.NonFatal
 
-/** Shared-cache materialization policy.
+/** The one materialization policy for eager leaves: the only place in the
+  * engine that checkpoints a frame or frees one.
   *
-  * Long-lived shared caches (the triple table, the enriched-article frame)
-  * must be LEAF plans: consumers embed up to ~8 copies, and an un-truncated
-  * lineage costs O(copies × plan size) of eager re-analysis per query (see
-  * the spark-bench-protocol notes / BENCH/BASELINE.md). (The edge
-  * projection is a leaf by construction: a parquet scan, KgPipeline.edges.)
-  * Two ways to get a leaf:
+  * A leaf truncates lineage to one scan of materialized blocks. Long-lived
+  * shared caches (the triple table, the enriched-article frame) must be
+  * leaves: consumers embed up to ~8 copies, and an un-truncated lineage
+  * costs O(copies × plan size) of eager re-analysis per query (see the
+  * spark-bench-protocol notes / BENCH/BASELINE.md). Query-local frames that
+  * feed several joins, and the rounds of [[FixedPoint]]'s loops, are leaves
+  * for the same reason. (The edge projection is a leaf by construction: a
+  * parquet scan, KgPipeline.edges.) Every one of them goes through [[leaf]],
+  * so the policy reaches them all. Two ways to get a leaf:
   *
   *  - `localCheckpoint` (default): blocks live on executors, zero extra I/O.
   *    Correct in one local JVM; on a real cluster a lost executor makes the
@@ -18,6 +25,12 @@ import org.apache.spark.sql.Dataset
   *    written to `graft.cache.checkpointDir` (HDFS/object store on a
   *    cluster) and survive executor loss — the right setting at 100 TB,
   *    costing one write+read of the cached frame.
+  *
+  * Release: a shared leaf is freed by its [[SessionCache]] through [[free]];
+  * [[SessionCache.releaseAll]] then empties the context's checkpoint
+  * directory ([[clearCheckpoints]]), which is where reliable mode's
+  * query-local leaves and loop rounds land. In default mode the context has
+  * no checkpoint directory and release deletes no file.
   */
 object Caches {
 
@@ -51,13 +64,24 @@ object Caches {
     ds.queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false)
-        l.rdd.getCheckpointFile.foreach { p => // reliable mode only
-          try {
-            val path = new org.apache.hadoop.fs.Path(p)
-            path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
-          } catch { case scala.util.control.NonFatal(_) => () }
-        }
+        l.rdd.getCheckpointFile.foreach(p => delete(sc, new Path(p))) // reliable mode only
       case _ => ()
     }
   }
+
+  /** Deletes every file under the context's checkpoint directory (Spark
+    * names it per context, so no other context's files are touched). A
+    * no-op when the context never set one, as in default mode.
+    */
+  private[plans] def clearCheckpoints(sc: SparkContext): Unit =
+    sc.getCheckpointDir.foreach { d =>
+      val dir = new Path(d)
+      try dir.getFileSystem(sc.hadoopConfiguration).listStatus(dir)
+        .foreach(s => delete(sc, s.getPath))
+      catch { case NonFatal(_) => () }
+    }
+
+  private def delete(sc: SparkContext, p: Path): Unit =
+    try p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
+    catch { case NonFatal(_) => () }
 }

@@ -13,10 +13,12 @@ import org.apache.spark.sql.functions.{count, lit, when}
   *    so AQE's per-stage barriers and replanning dominate the round cost
   *    (measured 4-6x, BENCH/BASELINE.md). Loops run at the session's
   *    shuffle width.
-  *  - the eager `localCheckpoint` of a round's result, which cuts lineage so
-  *    the plan stays O(1) per round. A convergence loop's change count is
-  *    observed (`Dataset.observe`) on that same checkpoint job, so seeing
-  *    the fixpoint costs no extra job.
+  *  - the eager leaf ([[Caches.leaf]], so under the session's leaf policy)
+  *    of a round's result, which cuts lineage so the plan stays O(1) per
+  *    round. A convergence loop's change count is observed
+  *    (`Dataset.observe`) on that same checkpoint job, so seeing the
+  *    fixpoint costs no extra job. The count is only compared with 0, so a
+  *    reliable checkpoint that computes the round twice changes nothing.
   *  - the round guard: at most `cap` productive rounds plus the confirming
   *    round that changes nothing. A loop that needs more fails loudly and
   *    names itself; it never returns a truncated result.
@@ -48,8 +50,8 @@ object FixedPoint {
         rounds += 1
         val r = round(state, rounds)
         val seen = Observation()
-        val leaf = r.frame.observe(seen, count(when(r.changed, lit(1))).as("changed"))
-          .localCheckpoint(eager = true)
+        val leaf = Caches.leaf(
+          r.frame.observe(seen, count(when(r.changed, lit(1))).as("changed")))
         if (seen.get("changed") == 0L) done = true
         else {
           require(rounds <= cap, s"fixed-point loop '$name' did not converge " +
@@ -75,7 +77,7 @@ object FixedPoint {
       var state = init
       for (i <- 1 to rounds) {
         state = round(state)
-        if (i % 2 == 0 || i == rounds) state = state.localCheckpoint(eager = true)
+        if (i % 2 == 0 || i == rounds) state = Caches.leaf(state)
       }
       Meters.set(s"$name.rounds", rounds)
       state

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import graft.plans.{Caches, SessionCache}
 
 /** Deduplication operators for a training-data pipeline over `documents`:
   * exact/bag-of-words dedup, MinHash signatures, MinHash-LSH candidate pairs
@@ -87,20 +88,18 @@ object Dedup {
     * of both d02 and d05, and each query references it 2-3× — without
     * materialization Catalyst recomputes it per reference (~6-8× total, the
     * round-2 regression). Cached per sf dir so d02 and d05 share ONE compute;
-    * released by [[release]] (Bench/Verify call it) so no blocks linger.
+    * freed (both frames unpersisted) by [[SessionCache.releaseAll]], so no
+    * blocks linger.
     * At 100 TB the same persist(MEMORY_AND_DISK) holds: signatures are a
     * narrow (doc_id, band, sig) projection, a tiny fraction of corpus bytes.
     */
   private[graft] case class Prologue(groups: DataFrame,
       groupPairs: DataFrame, sigs: DataFrame)
 
-  // plans.SessionCache: session-reference keys, single-build computeIfAbsent
-  // (a TrieMap.getOrElseUpdate could run the builder twice under concurrent
-  // first calls and leak the losing builder's persisted blocks), and a
-  // reentrancy-safe dead-session purge — one shared lifecycle implementation
-  // with KgPipeline's four caches.
-  private val prologueCache =
-    new graft.plans.SessionCache[Prologue]("dedup-lsh-prologue")
+  private val prologueCache = new SessionCache[Prologue]("dedup-lsh-prologue", p => {
+    p.sigs.unpersist(blocking = false)
+    p.groups.unpersist(blocking = false)
+  })
 
   private[graft] def prologue(s: SparkSession, d: String): Prologue =
     prologueCache.get(s, d) {
@@ -141,14 +140,14 @@ object Dedup {
   // (that is d09's calibration contract), and before r6 each re-executed the
   // bucket-bound + self-join chain inside its own plan
   private val bandPairsCache =
-    new graft.plans.SessionCache[DataFrame]("dedup-band-pairs")
+    new SessionCache[DataFrame]("dedup-band-pairs", Caches.free)
 
   /** [[boundedBandPairs]] over the shared prologue, distinct, as a
     * materialized leaf — the one candidate population d02 and d09 share.
     */
   private[graft] def bandPairsLeaf(s: SparkSession, d: String): DataFrame =
     bandPairsCache.get(s, d) {
-      boundedBandPairs(prologue(s, d).sigs).distinct().localCheckpoint(true)
+      Caches.leaf(boundedBandPairs(prologue(s, d).sigs).distinct())
     }
 
   // d02's VERIFIED top-100 pair table, materialized once per (session, sf):
@@ -157,7 +156,7 @@ object Dedup {
   // them inside its own plan — the whole candidate+verify chain ran twice
   // per lap and would run twice at 100 TB too (r5 verdict item 1)
   private val verifiedPairsCache =
-    new graft.plans.SessionCache[DataFrame]("dedup-d02-pairs")
+    new SessionCache[DataFrame]("dedup-d02-pairs", Caches.free)
 
   /** Rep-level LSH candidate pairs (a < b) from the guard-bounded banding —
     * the single definition of "d02's candidate population", shared with d09.
@@ -197,18 +196,10 @@ object Dedup {
         "CAST(size(array_intersect(ga, gb)) AS BIGINT) AS n_common",
         "CAST(size(ga) AS BIGINT) AS na", "CAST(size(gb) AS BIGINT) AS nb")
 
-  /** Drop the cached LSH prologue blocks (bench/verify hygiene). */
-  def release(): Unit = {
-    prologueCache.foreachValue { p =>
-      p.sigs.unpersist(blocking = false)
-      p.groups.unpersist(blocking = false)
-    }
-    prologueCache.clear()
-    bandPairsCache.foreachValue(graft.plans.Caches.free(_))
-    bandPairsCache.clear()
-    verifiedPairsCache.foreachValue(graft.plans.Caches.free(_))
-    verifiedPairsCache.clear()
-  }
+  /** Frees every shared cache in the JVM ([[SessionCache.releaseAll]]);
+    * kept as the hook the driver mains call.
+    */
+  def release(): Unit = SessionCache.releaseAll()
 
   /** d02's result rows (top-100 verified pairs), materialized as a leaf —
     * consumed by d02 (ordered readout) and d11 (cluster resolution).
@@ -234,23 +225,20 @@ object Dedup {
       // member)). The former distinct re-shuffled the full candidate set
       // for provably zero effect; any error in this argument would emit
       // duplicate (a, b) rows and turn the d02/d09/d11 oracle rows red.
-      val cand = bandPairsLeaf(s, d) // shared with d09
-        .unionByName(pro.groupPairs) // exact/BoW members ↔ canonical rep
-        .localCheckpoint(true)
+      val cand = Caches.leaf(bandPairsLeaf(s, d) // shared with d09
+        .unionByName(pro.groupPairs)) // exact/BoW members ↔ canonical rep
       val candDocs = cand.selectExpr("explode(array(a, b)) AS doc_id").distinct()
       // distinct word-3-gram ARRAY per candidate doc (no explode — the
       // in-row overlap consumes whole arrays); checkpointed: feeds both
       // array-attach joins
-      val sh = docs.join(candDocs, Seq("doc_id"), "left_semi")
+      val sh = Caches.leaf(docs.join(candDocs, Seq("doc_id"), "left_semi")
         .selectExpr("doc_id", "split(text, ' ') AS toks")
-        .selectExpr("doc_id", s"array_distinct($shingle3) AS gs")
-        .localCheckpoint(true)
-      pairOverlap(cand, sh)
+        .selectExpr("doc_id", s"array_distinct($shingle3) AS gs"))
+      Caches.leaf(pairOverlap(cand, sh)
         .selectExpr("a", "b",
           "(1000 * n_common) DIV (na + nb - n_common) AS jaccard_e3")
         .orderBy(col("jaccard_e3").desc, col("a"), col("b"))
-        .limit(100)
-        .localCheckpoint(true)
+        .limit(100))
     }
 
   def d02LshPairs(s: SparkSession, d: String): DataFrame =
@@ -377,10 +365,9 @@ object Dedup {
     // exact-text pre-collapse: identical texts ⇒ identical vectors; band
     // representatives only, pair members with their rep (verified through
     // the same cosine expression, so every output row is formula-derived)
-    val fpGroups = docs.selectExpr("doc_id", "md5(text) AS fp")
-      .groupBy(col("fp"))
-      .agg(min(col("doc_id")).as("rep"), collect_list(col("doc_id")).as("members"))
-      .localCheckpoint(true) // feeds the rep semi-join + group pairs + count
+    // feeds the rep semi-join + group pairs + count
+    val fpGroups = Caches.leaf(docs.selectExpr("doc_id", "md5(text) AS fp").groupBy(col("fp"))
+      .agg(min(col("doc_id")).as("rep"), collect_list(col("doc_id")).as("members")))
     val groupPairs = fpGroups
       .selectExpr("rep AS a", "explode(members) AS b")
       .filter(col("a") < col("b"))
@@ -393,10 +380,9 @@ object Dedup {
     // tokens) rows; now the ONLY pass over document text in d06, feeding
     // both the rep bucket projections and the verification vectors —
     // checkpoint so the text scan runs once
-    val feat = docs
+    val feat = Caches.leaf(docs
       .select(col("doc_id"),
-        graft.functions.Native.tokenCountVec("text", EmbDim).as("v"))
-      .localCheckpoint(true)
+        graft.functions.Native.tokenCountVec("text", EmbDim).as("v")))
     // dense vector + norm per doc; narrow over the feat blocks (each
     // broadcast side re-reads blocks and re-folds — O(64)/row, cheaper than
     // another checkpoint job)
@@ -405,12 +391,11 @@ object Dedup {
     // per-band hyperplane buckets for representatives, computed IN-ROW by
     // the native expression (the sign table is the same md5 rule the DuckDB
     // oracle states) — replaces a broadcast planes join + two groupBys
-    val bkt = feat
+    val bkt = Caches.leaf(feat
       .join(fpGroups.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id"),
         graft.functions.Native.embBuckets("v", NEmbBands, nPlanes).as("bkts"))
-      .selectExpr("doc_id", "posexplode(bkts) AS (band, bucket)")
-      .localCheckpoint(true) // both sides of the banded self-join
+      .selectExpr("doc_id", "posexplode(bkts) AS (band, bucket)")) // both banded self-join sides
     // Mega-bucket guard, adapted to near-dup semantics: hyperplane buckets
     // are NOT uniform — mutually-similar vectors pile into the SAME buckets
     // in every band (more planes can split random collisions but never a
@@ -656,18 +641,17 @@ object Dedup {
     // instead of n²/2 gram-set intersections. df ordering over reps instead
     // of all docs changes only candidate volume, never the output: prefix
     // filtering is lossless under ANY global total order.
-    val memb = docs.selectExpr("doc_id", "md5(text) AS fp")
-      .withColumn("rep", min(col("doc_id")).over(Window.partitionBy("fp")))
-      .localCheckpoint(true) // feeds reps, intra pairs, 2 expansion joins
+    // feeds reps, intra pairs, 2 expansion joins
+    val memb = Caches.leaf(docs.selectExpr("doc_id", "md5(text) AS fp")
+      .withColumn("rep", min(col("doc_id")).over(Window.partitionBy("fp"))))
     val reps = docs.join(
       memb.filter(col("doc_id") === col("rep")).select("doc_id"),
       Seq("doc_id"), "left_semi")
     // distinct (rep, gram) rows feed df, the ranked-prefix build, and the
     // verification join twice — materialize the explode ONCE (d02's rule)
-    val grams = reps
+    val grams = Caches.leaf(reps
       .selectExpr("doc_id", "split(text, ' ') AS toks")
-      .selectExpr("doc_id", s"explode(array_distinct($shingle3)) AS g")
-      .localCheckpoint(true)
+      .selectExpr("doc_id", s"explode(array_distinct($shingle3)) AS g"))
     val df = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
     val byDoc = Window.partitionBy("doc_id")
     val ranked = grams.join(df, Seq("g"))
@@ -677,8 +661,7 @@ object Dedup {
     // both sides of the self-join read the df-join + double-window chain —
     // materialize it once (exchange reuse across self-join sides is not
     // guaranteed, and under AQE the sides re-plan independently)
-    val prefix = ranked.filter(col("rk") <= col("n") - expr("(3 * n + 4) DIV 5") + 1)
-      .localCheckpoint(true)
+    val prefix = Caches.leaf(ranked.filter(col("rk") <= col("n") - expr("(3 * n + 4) DIV 5") + 1))
     // positional filter (PPJoin): a pair needs overlap c >= 3(na+nb)/8 to
     // reach J >= 3/5, and the FIRST common gram under the global (df, g)
     // order — which prefix filtering guarantees both prefixes contain —
@@ -690,7 +673,7 @@ object Dedup {
     // measured why this matters: under a saturating gram universe (closed
     // vocab) plain prefix filtering goes quadratic — candidates 183k -> 3.7M
     // from 5k -> 20k docs (exponent ~2.2) without it.
-    val cand = prefix.as("x").join(prefix.as("y"),
+    val cand = Caches.leaf(prefix.as("x").join(prefix.as("y"),
         col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id") &&
           lit(5) * least(col("x.n"), col("y.n")) >=
             lit(3) * greatest(col("x.n"), col("y.n")) &&
@@ -698,8 +681,7 @@ object Dedup {
             lit(3) * (col("x.n") + col("y.n")))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
         col("x.n").as("na"), col("y.n").as("nb"))
-      .distinct()
-      .localCheckpoint(true) // feeds candDocs, common, and the final join
+      .distinct()) // feeds candDocs, common, and the final join
     D08Stage(memb, grams, cand)
   }
 
@@ -715,10 +697,9 @@ object Dedup {
     // (one narrow in-row pass over candidate reps, no shuffle). The former
     // inner join on `common` only kept pairs sharing ≥1 gram; the Jaccard
     // threshold filter subsumes it (c = 0 can never satisfy 5c ≥ 3(na+nb)).
-    val garr = docs.join(candDocs, Seq("doc_id"), "left_semi")
+    val garr = Caches.leaf(docs.join(candDocs, Seq("doc_id"), "left_semi")
       .selectExpr("doc_id", "split(text, ' ') AS toks")
-      .selectExpr("doc_id", s"array_distinct($shingle3) AS gs")
-      .localCheckpoint(true) // feeds both array-attach joins
+      .selectExpr("doc_id", s"array_distinct($shingle3) AS gs")) // feeds both array-attach joins
     val repPairs = cand
       .join(garr.select(col("doc_id").as("a"), col("gs").as("ga")), Seq("a"))
       .join(garr.select(col("doc_id").as("b"), col("gs").as("gb")), Seq("b"))
@@ -798,11 +779,10 @@ object Dedup {
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_agree"))
     val candDocs = cand.selectExpr("explode(array(a, b)) AS doc_id").distinct()
     // distinct char-8-gram ARRAY per candidate doc (in-row overlap, as d02)
-    val sh = docs.join(candDocs, Seq("doc_id"), "left_semi")
+    val sh = Caches.leaf(docs.join(candDocs, Seq("doc_id"), "left_semi")
       .selectExpr("doc_id",
         "array_distinct(transform(sequence(1, greatest(length(text) - 7, 1)), " +
-          "i -> substr(text, i, 8))) AS gs")
-      .localCheckpoint(true) // read by both array-attach joins
+          "i -> substr(text, i, 8))) AS gs")) // read by both array-attach joins
     pairOverlap(cand, sh)
       .join(agree, Seq("a", "b"))
       .selectExpr("a", "b", "n_agree",
@@ -868,10 +848,10 @@ object Dedup {
     */
   def d10DuplicateSpans(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).filter(size(split(col("text"), " ")) >= 5)
-    val grams = docs
+    // feeds the df aggregate AND the semi join-back
+    val grams = Caches.leaf(docs
       .selectExpr("doc_id", "split(text, ' ') AS toks")
-      .selectExpr("doc_id", s"posexplode(${wordGramExpr(5)}) AS (p, g)")
-      .localCheckpoint(true) // feeds the df aggregate AND the semi join-back
+      .selectExpr("doc_id", s"posexplode(${wordGramExpr(5)}) AS (p, g)"))
     // "occurs in ≥ 2 distinct docs" ⟺ min(doc) ≠ max(doc): one-pass min/max
     // instead of a countDistinct (which expands to a two-phase distinct
     // aggregate over every corpus gram) — r6

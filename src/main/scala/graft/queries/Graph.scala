@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.canon.ConnectedComponents
-import graft.plans.FixedPoint
+import graft.plans.{Caches, FixedPoint}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -44,7 +44,7 @@ object Graph {
   // iterative frontier expansion (the bounded transitive-closure loop of
   // reference Q3, create_events_per_month_diagram.py:31-38).
   def g02TreeDepth(s: SparkSession, d: String): DataFrame = {
-    val nodes = Tables.documents(s, d).select(col("doc_id")).localCheckpoint(true)
+    val nodes = Caches.leaf(Tables.documents(s, d).select(col("doc_id")))
     val edges = nodes.filter(col("doc_id") > 0)
       .selectExpr("doc_id AS child", "doc_id DIV 2 AS parent")
     val root = nodes.filter(col("doc_id") === 0)
@@ -95,13 +95,13 @@ object Graph {
   private val PrIters = 8
 
   def g03PageRank(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(col("doc_id")).localCheckpoint(true)
+    val docs = Caches.leaf(Tables.documents(s, d).select(col("doc_id")))
     val n = docs.count() // one count over the cached id column
     require(n > 0, "g03 PageRank needs a non-empty documents table — " +
       "the ring edges and the 1/N teleport mass are undefined at N = 0")
-    val edges = docs.selectExpr("doc_id AS src", s"(doc_id + 1) % $n AS dst")
-      .unionAll(docs.selectExpr("doc_id AS src", s"(doc_id * 2 + 1) % $n AS dst"))
-      .localCheckpoint(eager = true) // reused every round
+    // reused every round
+    val edges = Caches.leaf(docs.selectExpr("doc_id AS src", s"(doc_id + 1) % $n AS dst")
+      .unionAll(docs.selectExpr("doc_id AS src", s"(doc_id * 2 + 1) % $n AS dst")))
     val teleport = 15L * (PrScale / n) / 100
     FixedPoint.iterate(s, "pagerank", PrIters)(
       docs.selectExpr("doc_id AS node", s"CAST(${PrScale / n} AS BIGINT) AS pr")) { pr =>
@@ -148,7 +148,7 @@ object Graph {
   // orientation-independent, so the DuckDB oracle enumerates id-canonically
   // (x < y < z) and must agree row-for-row.
   def g04Triangles(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(col("doc_id")).localCheckpoint(true)
+    val docs = Caches.leaf(Tables.documents(s, d).select(col("doc_id")))
     val n = docs.count()
     require(n > 2, s"g04 needs >= 3 nodes for the ring graph to be simple (n=$n)")
     val dir = docs.selectExpr("doc_id AS u", s"(doc_id + 1) % $n AS v")
@@ -156,18 +156,17 @@ object Graph {
       .unionAll(docs.selectExpr("doc_id AS u", s"(doc_id * 2 + 1) % $n AS v"))
     // canonical undirected edge set (a < b); feeds degree, orientation, and
     // the triangle-closing join
-    val und = dir.filter(col("u") =!= col("v"))
-      .selectExpr("least(u, v) AS a", "greatest(u, v) AS b").distinct()
-      .localCheckpoint(true)
+    val und = Caches.leaf(dir.filter(col("u") =!= col("v"))
+      .selectExpr("least(u, v) AS a", "greatest(u, v) AS b").distinct())
     val deg = und.selectExpr("a AS node").unionAll(und.selectExpr("b AS node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val oriented = und
+    // feeds both sides of the wedge self-join
+    val oriented = Caches.leaf(und
       .join(deg.selectExpr("node AS a", "deg AS dega"), Seq("a"))
       .join(deg.selectExpr("node AS b", "deg AS degb"), Seq("b"))
       .selectExpr(
         "IF(dega < degb OR (dega = degb AND a < b), a, b) AS src",
-        "IF(dega < degb OR (dega = degb AND a < b), b, a) AS dst")
-      .localCheckpoint(true) // feeds both sides of the wedge self-join
+        "IF(dega < degb OR (dega = degb AND a < b), b, a) AS dst"))
     // wedges at the apex; spokes id-ordered so the closing lookup hits the
     // CANONICAL edge set with a plain equi-join (matching on the oriented set
     // would need an either-direction OR condition → nested-loop join)
@@ -225,14 +224,13 @@ object Graph {
   private val SsspMaxRounds = 64
 
   def g05Sssp(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(col("doc_id")).localCheckpoint(true)
+    val docs = Caches.leaf(Tables.documents(s, d).select(col("doc_id")))
     val n = docs.count()
     require(n > 0, "g05 SSSP needs a non-empty documents table")
-    val edges = docs.selectExpr("doc_id AS src", s"(doc_id + 1) % $n AS dst",
+    val edges = Caches.leaf(docs.selectExpr("doc_id AS src", s"(doc_id + 1) % $n AS dst",
         "CAST(1 + doc_id % 7 AS BIGINT) AS w")
       .unionAll(docs.selectExpr("doc_id AS src", s"(doc_id * 2 + 1) % $n AS dst",
-        "CAST(1 + doc_id % 7 AS BIGINT) AS w"))
-      .localCheckpoint(eager = true) // reused every round
+        "CAST(1 + doc_id % 7 AS BIGINT) AS w"))) // reused every round
     val seed = docs.filter(col("doc_id") === 0)
       .selectExpr("doc_id AS node", "CAST(0 AS BIGINT) AS dist")
     // Shape kept AS-IS after measurement (r6): a union-of-leaves dist
@@ -242,7 +240,7 @@ object Graph {
     // plan grows with the round count, so the "one job fewer per round"
     // trade loses. The checkpointed incremental dist table stands.
     val (dist, _) = FixedPoint.converge(s, "sssp", SsspMaxRounds) {
-      val leaf = seed.localCheckpoint(eager = true)
+      val leaf = Caches.leaf(seed)
       // the oracle's d0 CTE seeds node 0 UNCONDITIONALLY; a documents table
       // without doc_id 0 would make the engine return an empty frame (empty
       // frontier, immediate loop exit) while the oracle still emits phantom
@@ -260,8 +258,7 @@ object Graph {
         .filter(col("dist").isNull || col("cand") < col("dist"))
         .selectExpr("node", "cand AS dist")
       FixedPoint.Round(improved, leaf =>
-        (dist.join(leaf, Seq("node"), "left_anti").union(leaf)
-          .localCheckpoint(eager = true), leaf))
+        (Caches.leaf(dist.join(leaf, Seq("node"), "left_anti").union(leaf)), leaf))
     }
     dist.selectExpr("node AS doc_id", "dist").orderBy(col("doc_id"))
   }

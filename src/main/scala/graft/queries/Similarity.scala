@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import graft.plans.{Caches, SessionCache}
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float> dim=64, label).
@@ -39,16 +40,8 @@ object Similarity {
   // (recall calibration over exactly these row sets) previously re-executed
   // both scans + top-k windows inside its own plan (the d11 lesson applied
   // to the similarity family, r6). Results are NQueries×K rows.
-  private val s01Cache = new graft.plans.SessionCache[DataFrame]("sim-s01")
-  private val s02Cache = new graft.plans.SessionCache[DataFrame]("sim-s02")
-
-  /** Free the cached s01/s02 result leaves (bench/verify hygiene — invoked
-    * via KgPipeline.release, the hook the frozen driver mains call).
-    */
-  def release(): Unit = {
-    s01Cache.foreachValue(graft.plans.Caches.free(_)); s01Cache.clear()
-    s02Cache.foreachValue(graft.plans.Caches.free(_)); s02Cache.clear()
-  }
+  private val s01Cache = new SessionCache[DataFrame]("sim-s01", Caches.free)
+  private val s02Cache = new SessionCache[DataFrame]("sim-s02", Caches.free)
 
   private def s01Cached(s: SparkSession, d: String): DataFrame =
     s01Cache.get(s, d) {
@@ -62,10 +55,9 @@ object Similarity {
             s"ELSE CAST(floor(1e6 * $dotExpr / ($qnormExpr * $cnormExpr)) AS BIGINT) END AS sim_e6")
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("sim_e6").desc, col("cand_id"))
-      scored.withColumn("rk", row_number().over(w))
+      Caches.leaf(scored.withColumn("rk", row_number().over(w))
         .filter(col("rk") <= K)
-        .select(col("query_id"), col("rk"), col("cand_id"), col("sim_e6"))
-        .localCheckpoint(true)
+        .select(col("query_id"), col("rk"), col("cand_id"), col("sim_e6")))
     }
 
   def s01KnnBrute(s: SparkSession, d: String): DataFrame =
@@ -133,10 +125,9 @@ object Similarity {
             s"ELSE CAST(floor(1e6 * $dotExpr / ($qnormExpr * $cnormExpr)) AS BIGINT) END AS sim_e6")
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("sim_e6").desc, col("cand_id"))
-      scored.withColumn("rk", row_number().over(w))
+      Caches.leaf(scored.withColumn("rk", row_number().over(w))
         .filter(col("rk") <= K)
-        .select(col("query_id"), col("rk"), col("cand_id"), col("sim_e6"))
-        .localCheckpoint(true)
+        .select(col("query_id"), col("rk"), col("cand_id"), col("sim_e6")))
     }
 
   def s02AnnLsh(s: SparkSession, d: String): DataFrame =

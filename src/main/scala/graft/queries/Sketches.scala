@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.Caches
 
 /** Probabilistic sketch operators — the approximate-aggregation family a
   * 100 TB pipeline leans on when exact distinct/frequency state would not
@@ -439,13 +440,12 @@ object Sketches {
     // type universe from the aggregated per-type frame (every event
     // contributes a `per` row, so the distinct type set is identical) —
     // saves a third full scan of events; `per` is types×256 rows at most
-    val perLeaf = per.localCheckpoint(true) // feeds types + the regs join
+    val perLeaf = Caches.leaf(per) // feeds types + the regs join
     val types = perLeaf.select(col("event_type")).distinct()
-    val regs = types.crossJoin(s.range(256).toDF("bucket"))
+    val regs = Caches.leaf(types.crossJoin(s.range(256).toDF("bucket"))
       .join(perLeaf, Seq("event_type", "bucket"), "left")
       .select(col("event_type"), col("bucket"),
-        coalesce(col("r"), lit(0L)).as("register"))
-      .localCheckpoint(true) // both sides of the bucket-aligned pair join
+        coalesce(col("r"), lit(0L)).as("register"))) // both sides of the bucket-aligned pair join
     val pairSums = regs.as("a").join(regs.as("b"),
         col("a.bucket") === col("b.bucket") &&
           col("a.event_type") < col("b.event_type"))
@@ -459,8 +459,8 @@ object Sketches {
       "CAST(47072 AS BIGINT) * 8589934592 DIV sa AS est_a",
       "CAST(47072 AS BIGINT) * 8589934592 DIV sb AS est_b",
       "CAST(47072 AS BIGINT) * 8589934592 DIV su AS est_union")
-    val userTypes = ev.select(col("user_id"), col("event_type")).distinct()
-      .localCheckpoint(true) // per-type counts + the pair union counts
+    // per-type counts + the pair union counts
+    val userTypes = Caches.leaf(ev.select(col("user_id"), col("event_type")).distinct())
     val exactPer = userTypes.groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n"))
     val pairDim = est.select(col("ta"), col("tb"))

@@ -208,10 +208,9 @@ object TrainingMix {
   // shape.
   // Scale: a REAL eval set is benchmark-sized (MBs against a 100 TB corpus)
   // and its gram set belongs on the broadcast side; here the deterministic
-  // 1/97 split SCALES WITH THE CORPUS, so the join is left to Spark/AQE by
-  // default (runtime size decides) and `graft.decontam.broadcast=true` is
-  // the explicit hint for genuinely small eval sets — a forced hint would
-  // bypass the size thresholds and OOM at scale. ONE gram scan feeds both
+  // 1/97 split SCALES WITH THE CORPUS, so the join is left to Spark/AQE
+  // (runtime size decides) — a forced broadcast hint would bypass the size
+  // thresholds and OOM at scale. ONE gram scan feeds both
   // counters — the left join tags eval hits in-stream and a single
   // partial-agg groupBy(doc_id) emits (n_grams, n_hits) together, instead
   // of two consumers recomputing the explode. Docs shorter than n tokens
@@ -229,10 +228,8 @@ object TrainingMix {
     val docs = Tables.documents(s, d)
     val evalGrams = grams(docs.filter(col("doc_id") % 97 === 0))
       .select(col("g")).distinct()
-    val evalSide = if (s.conf.getOption("graft.decontam.broadcast").exists(_.toBoolean))
-      broadcast(evalGrams) else evalGrams
     val counts = grams(docs.filter(col("doc_id") % 97 =!= 0))
-      .join(evalSide.withColumn("hit", lit(1)), Seq("g"), "left")
+      .join(evalGrams.withColumn("hit", lit(1)), Seq("g"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"), count(col("hit")).as("n_hits"))
     docs.filter(col("doc_id") % 97 =!= 0).select(col("doc_id"))

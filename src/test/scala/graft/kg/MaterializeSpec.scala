@@ -153,23 +153,20 @@ class MaterializeSpec extends AnyFunSuite {
 
   test("salted writes: hot partitions spread over >1 file, manifest counts honest") {
     val table = Files.createTempDirectory("graft_triples_salt").toString
-    spark.conf.set("graft.write.tasksPerPartition", "4")
-    try {
-      val someDate = "2022-01-05"
-      val t = Pipeline.triples(spark, sfDir, Some(Set(someDate)))
-      val m = TableIO.replacePartitions(spark, table, t.toDF(), "event_date", Seq(someDate))
-      val meta = m.partitions(someDate)
-      val dir = java.nio.file.Paths.get(table, "data", s"event_date=$someDate")
-      val s = Files.list(dir)
-      val actual = try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.count(_.toString.endsWith(".parquet"))
-      } finally s.close()
-      assert(meta.files == actual, "manifest file count must match the layout")
-      assert(meta.files > 1, s"hot date should spread over >1 salt bucket, got ${meta.files}")
-      // the salted exchange changes layout only — not content
-      assert(TableIO.read(spark, table, "event_date").count() == meta.rows)
-    } finally spark.conf.unset("graft.write.tasksPerPartition")
+    val someDate = "2022-01-05"
+    val t = Pipeline.triples(spark, sfDir, Some(Set(someDate)))
+    val m = TableIO.replacePartitions(spark, table, t.toDF(), "event_date", Seq(someDate))
+    val meta = m.partitions(someDate)
+    val dir = java.nio.file.Paths.get(table, "data", s"event_date=$someDate")
+    val s = Files.list(dir)
+    val actual = try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.count(_.toString.endsWith(".parquet"))
+    } finally s.close()
+    assert(meta.files == actual, "manifest file count must match the layout")
+    assert(meta.files > 1, s"hot date should spread over >1 salt bucket, got ${meta.files}")
+    // the salted exchange changes layout only — not content
+    assert(TableIO.read(spark, table, "event_date").count() == meta.rows)
   }
 
   test("REPLACE WHERE rewrites exactly the targeted partition") {

@@ -12,7 +12,7 @@ class SessionCacheSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("builder runs exactly once per key under concurrent first calls") {
-    val c = new SessionCache[String]("spec")
+    val c = new SessionCache[String]("spec", _ => ())
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val latch = new java.util.concurrent.CountDownLatch(1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
@@ -32,7 +32,7 @@ class SessionCacheSpec extends AnyFunSuite {
   }
 
   test("keys are session REFERENCES: a different session object rebuilds") {
-    val c = new SessionCache[String]("spec-ref")
+    val c = new SessionCache[String]("spec-ref", _ => ())
     var n = 0
     val s2 = spark.newSession() // same context, distinct session reference
     assert(c.get(spark, "d") { n += 1; s"v$n" } == "v1")
@@ -42,13 +42,23 @@ class SessionCacheSpec extends AnyFunSuite {
     assert(n == 3)
   }
 
+  test("releaseAll frees and empties a cache that no owner lists") {
+    val freed = new java.util.concurrent.atomic.AtomicInteger(0)
+    val c = new SessionCache[String]("spec-unlisted", _ => freed.incrementAndGet())
+    assert(c.get(spark, "d")("v1") == "v1")
+    assert(c.get(spark, "e")("v2") == "v2")
+    SessionCache.releaseAll()
+    assert(freed.get() == 2)
+    assert(c.get(spark, "d")("rebuilt") == "rebuilt")
+  }
+
   test("a builder may call get on ANOTHER cache (the edges->triples chain)") {
     // the regression class this guards: nested gets across caches must not
     // trip the same-map-modification hazard the purge used to create — the
     // nested get purges only ITS OWN map, never the one whose builder is
     // running on this thread
-    val inner = new SessionCache[String]("spec-inner")
-    val outer = new SessionCache[String]("spec-outer")
+    val inner = new SessionCache[String]("spec-inner", _ => ())
+    val outer = new SessionCache[String]("spec-outer", _ => ())
     val got = outer.get(spark, "d") {
       "outer(" + inner.get(spark, "d")("innerV") + ")"
     }

@@ -135,14 +135,6 @@ class TrainingMixSpec extends AnyFunSuite {
     assert(got == expected)
     // both classes present: contaminated (cluster/near-dups) and clean filler
     assert(expected.exists(_._3 > 0) && expected.exists(_._3 == 0L))
-    // the explicit broadcast-hint path (small-eval-set override) produces
-    // identical rows to the default let-Spark-decide plan
-    spark.conf.set("graft.decontam.broadcast", "true")
-    try {
-      val fb = TrainingMix.queries("x03_decontaminate")(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      assert(fb == expected)
-    } finally spark.conf.unset("graft.decontam.broadcast")
   }
 
   test("x04 temperature weights match hand-computed e6 goldens") {
